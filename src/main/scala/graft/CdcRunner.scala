@@ -110,7 +110,7 @@ object CdcRunner {
         graft.sink.SinkConfig("raw-append", s"$work/raw"))
         .asInstanceOf[graft.sink.RawAppendSink]
       val t0r = System.nanoTime()
-      Pipeline.startWithSink(spark, binlogDir, raw, ckptDir,
+      Pipeline.startQuery(spark, binlogDir, raw, ckptDir,
         maxFilesPerTrigger = fpt).awaitTermination()
       val secs = (System.nanoTime() - t0r) / 1e9
       val rawRows = raw.read(spark).count()
@@ -146,23 +146,11 @@ object CdcRunner {
     // and exits (the test/bench shape).
     val daemonSecs = opt.get("--daemon-seconds").map(_.toLong)
     val httpPort = opt.get("--http-port").map(_.toInt)
-    // "interval" (default) | "interval:<shift>" | "hash": a checkpoint's
-    // stateful-dedup plan is baked in at first start — pass
-    // `--dedup-impl hash` to resume a checkpoint created before the
-    // interval/bitmap dedup became default, or `interval:<shift>` to
-    // retune the bucket width (checkpoint-locked like the partition
-    // count). Measured guidance (BENCH.md round 6): over DENSELY
-    // traversed offset ranges total bitmap bytes are range/8 at ANY
-    // shift, and a HIGHER shift is strictly worse when offsets scatter
-    // (each stray lsn pays a whole 2^shift/8-byte bucket) — so keep the
-    // default unless per-row store overhead dominates; the real bound on
-    // byte-stride WAL state is the /rebase retirement path, not shift.
-    val dedupImpl = opt.getOrElse("--dedup-impl", "interval")
     // inline maintenance cadence (compact + vacuum every N batches on the
     // commit thread); 0 = off. --vacuum-grace-ms shortens the orphan
     // grace for tests/demos (production keeps the 24 h default).
     val maintenance = opt.get("--maintenance-every").map(_.toInt)
-      .filter(_ > 0).map(n => graft.pipeline.Pipeline.Maintenance(
+      .filter(_ > 0).map(n => graft.sink.Maintenance(
         everyBatches = n,
         vacuumGraceMs = opt.get("--vacuum-grace-ms").map(_.toLong)
           .getOrElse(86400000L)))
@@ -173,10 +161,9 @@ object CdcRunner {
     val rebaseThresholdBytes = opt.get("--rebase-threshold-mb")
       .map(_.toLong * 1024 * 1024).getOrElse(0L)
     if (daemonSecs.isDefined) {
-      val ctl = new graft.control.Control(spark, binlogDir, lake, ckptDir,
-        maxFilesPerTrigger = fpt, dedupImpl = dedupImpl,
-        maintenance = maintenance,
-        rebaseThresholdBytes = rebaseThresholdBytes)
+      val ctl = new graft.control.Control(spark, binlogDir,
+        graft.sink.MergeSink(lake, maintenance = maintenance), ckptDir,
+        maxFilesPerTrigger = fpt, rebaseThresholdBytes = rebaseThresholdBytes)
       // --http-bind widens past the loopback default (unauthenticated
       // verbs: widening is an explicit operator decision)
       val httpBind = opt.getOrElse("--http-bind", "127.0.0.1")
@@ -191,8 +178,7 @@ object CdcRunner {
     } else {
       val t0 = System.nanoTime()
       Pipeline.runAvailable(spark, binlogDir, lake, ckptDir,
-        maxFilesPerTrigger = fpt, dedupImpl = dedupImpl,
-        maintenance = maintenance)
+        maxFilesPerTrigger = fpt, maintenance = maintenance)
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[cdc] applied ${cfg.totalEvents} events in $secs%.1f s " +
         f"(${cfg.totalEvents / secs}%.0f events/s)")

@@ -20,7 +20,8 @@ import graft.model.Schemas
   * 40 single-table daemons per host — multitenant footprint benchmark,
   * /root/reference/benchmarks/2026-04-13-cdc-footprint-multitenant.md; here
   * ONE streaming query fans out to all lakes): N micro-batches through
-  * [[Pipeline.startMulti]] over `--tables` destination lakes with staggered
+  * [[graft.pipeline.Pipeline.startQuery]] and a [[graft.sink.MultiSink]]
+  * over `--tables` destination lakes with staggered
   * inline maintenance, reporting wall, events/s, per-lake version counts
   * (bounded by the stagger + vacuum) and total live rows. The per-table
   * correctness of this exact shape is HttpControlSpec's multi-table test;
@@ -116,10 +117,10 @@ object MultiBench {
     }.toMap
 
     val t0 = System.nanoTime()
-    graft.pipeline.Pipeline.startMulti(spark, s"$work/daemon/binlog", lakes,
-      s"$work/daemon/ckpt", maxFilesPerTrigger = fpt, availableNow = true,
-      maintenance = Some(graft.pipeline.Pipeline.Maintenance(
-        everyBatches = maintEvery, keepVersions = 2, vacuumGraceMs = 0L)))
+    val sink = new graft.sink.MultiSink(lakes, Some(graft.sink.Maintenance(
+      everyBatches = maintEvery, keepVersions = 2, vacuumGraceMs = 0L)))
+    graft.pipeline.Pipeline.startQuery(spark, s"$work/daemon/binlog", sink,
+      s"$work/daemon/ckpt", maxFilesPerTrigger = fpt, availableNow = true)
       .awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
 

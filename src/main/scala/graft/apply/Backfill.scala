@@ -2,6 +2,7 @@ package graft.apply
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.lake.{LakeTable, LineageEntry, Snapshot}
 import graft.model.{Op, Schemas}
@@ -76,7 +77,8 @@ object Backfill {
     // source key set — at scale the single most expensive pass of the plan,
     // run twice (round-7 profile). MEMORY_AND_DISK: spilling the key set
     // is strictly cheaper than recomputing its shuffle.
-    val distinct = keys.select(col(keyCol)).distinct().persist()
+    val distinct = keys.select(col(keyCol)).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = distinct.count()
       if (n == 0) return Seq.empty
@@ -138,7 +140,7 @@ object Backfill {
       .select(
         (Schemas.keys ++ Seq("lsn", "op") ++ payload).map(col) ++
           payload.map(c => lit(true).as(s"${c}__carried")): _*)
-      .persist()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val touched = ups
         .select(collect_set(lake.bucketExpr(snap.numBuckets)).as("b"))

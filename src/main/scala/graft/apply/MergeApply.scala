@@ -132,7 +132,7 @@ object MergeApply {
     // No explicit dropDuplicates here: the LWW reduce is idempotent under
     // duplicated rows (same lsn ⇒ identical row ⇒ same max_by winner), so an
     // extra shuffle on lsn would buy nothing. Cross-batch redelivery is
-    // handled by the streaming dropDuplicatesWithinWatermark stage, the
+    // handled by the streaming IntervalDedup stage, the
     // batchId guard, the per-event `lsn > snap.endLsn` filter in `isData`,
     // and the per-key _lsn guard in the MERGE (defense in depth).
     val ups = Dedup.lwwReduce(data, payload, addLsn)

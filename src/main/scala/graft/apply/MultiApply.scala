@@ -2,6 +2,7 @@ package graft.apply
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.lake.LakeTable
 
@@ -54,7 +55,7 @@ object MultiApply {
     // Persist once: every tracked table re-reads the batch for its own
     // filtered MERGE — without the cache that is one source scan per table
     // (at reference-like 25 tables, 25 scans of the same micro-batch).
-    val cached = batch.persist()
+    val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // one pre-scan: destination tables present + untracked-event count
       // (reference A5: DISTINCT dst tables per flush). NULL `table` counts

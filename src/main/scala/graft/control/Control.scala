@@ -3,9 +3,10 @@ package graft.control
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.apply.Backfill
+import graft.dedup.IntervalDedup
 import graft.lake.LakeTable
 import graft.pipeline.Pipeline
+import graft.sink.{MergeSink, MultiSink, Sink}
 
 /** Point-in-time engine status — the payload of the reference's HTTP
   * status/metrics endpoints (reference: src/control/handlers.rs:103-312),
@@ -57,9 +58,7 @@ case class TableStatus(
     rowCount: Long,
     lastBatchWallMs: Long)
 
-/** The verb surface [[HttpControl]] serves — implemented by the
-  * single-table [[Control]] and the multi-table [[MultiControl]].
-  */
+/** The verb surface [[HttpControl]] serves — implemented by [[Control]]. */
 trait EngineControl {
   def status(): ControlStatus
   def metrics: MetricsSampler
@@ -79,7 +78,7 @@ trait EngineControl {
   def close(): Unit
 }
 
-/** Memoized dedup-state size, shared by both control planes: `progressTs`
+/** Memoized dedup-state size: `progressTs`
   * keys the memo to the micro-batch that last committed (state only moves
   * per batch), `epoch` guards against publishing a size computed across a
   * concurrent rebase's checkpoint drop.
@@ -91,10 +90,7 @@ private[control] object StateBytesMemo {
   val invalid: StateBytesMemo = StateBytesMemo(-1L, 0L, -1L, -1L)
 }
 
-/** The ONE state-size memo implementation both control planes use
-  * (Control and MultiControl previously carried verbatim copies of this
-  * concurrency-sensitive logic — a fix applied to one and not the other
-  * would diverge silently).
+/** The dedup-state size memo behind /status.
   *
   * /status may be polled at dashboard frequency, and a recursive listing
   * of a multi-GB state dir per poll is real I/O against object storage —
@@ -132,7 +128,7 @@ private[control] final class StateBytesTracker(
   }
 }
 
-/** Checkpoint-dir helpers shared by both control planes. */
+/** Checkpoint-dir helpers of the control plane. */
 private[control] object CheckpointOps {
   import org.apache.hadoop.fs.Path
 
@@ -170,31 +166,46 @@ private[control] object CheckpointOps {
   * Streaming's offset WAL makes the restart exactly-once); drain runs
   * Trigger.AvailableNow to the end of the available log and returns.
   *
+  * One class over one lake ([[MergeSink]]) or many ([[MultiSink]]): one
+  * streaming query feeds the sink, so every verb acts on the whole table
+  * set at once, exactly like the reference daemon's single control loop
+  * over its table list. Status aggregates take the conservative view
+  * across lakes — `batchId`/`endLsn` are the MIN (a batch is only "done"
+  * once every table committed it), `rowCount` the sum — and a multi-table
+  * sink adds one `tables` row per lake (reference per-table progress,
+  * handlers.rs:255-291). For one lake the aggregates are that lake's
+  * values.
+  *
+  * The backfill verbs (snapshot trigger, snapshot pause/resume) need a
+  * MergeSink with a chunk source and fail loudly without one.
+  *
   * Single-controller assumption, like the reference daemon's one control
   * loop; methods are synchronized for in-process safety.
   */
 final class Control(
     spark: SparkSession,
     binlogDir: String,
-    lake: LakeTable,
+    sink: Sink,
     checkpointDir: String,
     maxFilesPerTrigger: Int = 1,
     transportDedup: Boolean = true,
-    chunkSource: Option[Backfill.ChunkSource] = None,
-    // "interval" (default) | "hash". NOTE: the dedup implementation is
-    // baked into a checkpoint's stateful-operator plan — resuming a
-    // checkpoint written under the other implementation fails with a
-    // state(-schema) mismatch; pass "hash" to keep driving pre-round-4
-    // checkpoints.
-    dedupImpl: String = "interval",
-    // inline lake maintenance (compact + vacuum on the commit thread)
-    maintenance: Option[Pipeline.Maintenance] = None,
+    // checkpoint-locked: resuming under a different shift fails loudly
+    dedupShift: Int = IntervalDedup.DefaultShift,
     // dedup-state size (bytes under <checkpoint>/state) above which
     // status() flags rebaseRecommended; 0 = never recommend. Sizing: the
     // stride-64 measurement (BENCH.md) puts bitmap state at ~122 GB per
     // 10^12-byte WAL window at shift 14 — a daemon tailing byte-stride
     // LSNs should set this to what its executors can actually hold.
     rebaseThresholdBytes: Long = 0L) extends EngineControl {
+
+  // the lakes that hold the stream position, sorted by table name
+  private val lakes: Seq[(String, LakeTable)] = sink match {
+    case m: MergeSink => Seq(m.lake.root -> m.lake)
+    case m: MultiSink => m.lakes.toSeq.sortBy(_._1)
+    case other => throw new IllegalArgumentException(
+      s"Control drives lake sinks (MergeSink, MultiSink), not $other")
+  }
+  private val perTable = sink.isInstanceOf[MultiSink]
 
   // @volatile so status()/isRunning never block on the control lock —
   // drain() holds it for the whole backlog, and the observability
@@ -207,22 +218,36 @@ final class Control(
   @volatile private var filesPerTrigger: Int = maxFilesPerTrigger
 
   // Snapshot gate (reference snapshot_pause/resume, handlers.rs:233-253):
-  // consulted by the pipeline's foreachBatch before EACH interleaved
-  // backfill chunk, so a pause takes effect at the next chunk boundary
-  // while the CDC stream keeps flowing — exactly the reference split
-  // between the replication loop and the snapshot task. @volatile, not
-  // the control lock: the flag is read from the streaming thread.
+  // consulted by the sink before EACH interleaved backfill chunk, so a
+  // pause takes effect at the next chunk boundary while the CDC stream
+  // keeps flowing — exactly the reference split between the replication
+  // loop and the snapshot task. @volatile, not the control lock: the flag
+  // is read from the streaming thread.
   @volatile private var snapshotPausedFlag: Boolean = false
+
+  // the sink the query runs: a backfilling MergeSink gets the gate above
+  private val (engineSink, backfill): (Sink, Option[MergeSink]) = sink match {
+    case m: MergeSink if m.chunkSource.isDefined =>
+      val gated = m.copy(backfillGate =
+        () => !snapshotPausedFlag && m.backfillGate())
+      (gated, Some(gated))
+    case s => (s, None)
+  }
+
+  private def chunkSource = backfill.flatMap(_.chunkSource)
+
+  private def requireBackfill(): MergeSink = backfill.getOrElse(
+    throw new IllegalArgumentException("no chunk source configured"))
 
   def snapshotPaused: Boolean = snapshotPausedFlag
 
   /** Hold further backfill chunks (the stream keeps flowing). Idempotent;
     * takes effect at the next chunk boundary within the current batch.
     */
-  def pauseSnapshot(): Unit = snapshotPausedFlag = true
+  def pauseSnapshot(): Unit = { requireBackfill(); snapshotPausedFlag = true }
 
   /** Let backfill chunks interleave again. Idempotent. */
-  def resumeSnapshot(): Unit = snapshotPausedFlag = false
+  def resumeSnapshot(): Unit = { requireBackfill(); snapshotPausedFlag = false }
 
   /** Per-batch rate/lag observations (A9), fed by the streaming listener
     * bus for this engine's query; [[metricsDf]] exposes the history, the
@@ -235,15 +260,14 @@ final class Control(
 
   def isRunning: Boolean = query.exists(_.isActive)
 
+  private def startQuery(availableNow: Boolean): StreamingQuery =
+    Pipeline.startQuery(spark, binlogDir, engineSink, checkpointDir,
+      filesPerTrigger, availableNow = availableNow,
+      transportDedup = transportDedup, dedupShift = dedupShift)
+
   /** Start (or resume after [[pause]]) continuous processing. */
   def resume(): Unit = synchronized {
-    if (!isRunning)
-      query = Some(Pipeline.start(spark, binlogDir, lake, checkpointDir,
-        filesPerTrigger, availableNow = false,
-        transportDedup = transportDedup, chunkSource = chunkSource,
-        dedupImpl = dedupImpl,
-        backfillGate = () => !snapshotPausedFlag,
-        maintenance = maintenance))
+    if (!isRunning) query = Some(startQuery(availableNow = false))
   }
 
   /** Config reload (reference handlers.rs:103-223): apply new settings and
@@ -286,12 +310,10 @@ final class Control(
   def drain(): Unit = synchronized {
     pause()
     drainingFlag = true
-    try Pipeline.runAvailable(spark, binlogDir, lake, checkpointDir,
-      filesPerTrigger, transportDedup, chunkSource,
-      dedupImpl = dedupImpl,
-      backfillGate = () => !snapshotPausedFlag,
-      maintenance = maintenance)
-    finally {
+    try {
+      startQuery(availableNow = true).awaitTermination()
+      backfill.foreach(_.finishBackfill(spark))
+    } finally {
       drainingFlag = false
       stateBytes.invalidate()
     }
@@ -313,7 +335,7 @@ final class Control(
     * [[drain]]).
     */
   def triggerSnapshot(): Unit = synchronized {
-    require(chunkSource.isDefined, "no chunk source configured")
+    val lake = requireBackfill().lake
     require(!isRunning,
       "pause() the stream before triggerSnapshot(): a control-thread commit" +
         " races the stream's own commits for the next snapshot version")
@@ -328,6 +350,7 @@ final class Control(
     * that window. Returns false (→ 409) when the stream is running.
     */
   def triggerSnapshotIfPaused(): Boolean = synchronized {
+    requireBackfill() // no chunk source: loud even while running
     if (isRunning) false
     else { triggerSnapshot(); true }
   }
@@ -335,21 +358,22 @@ final class Control(
   /** Live dedup-state retirement (the rebase the runner's
     * `--rebase-checkpoint` flag did only at process start): drop the
     * streaming checkpoint — offsets AND the dedup state store — while the
-    * engine is paused, keeping the lake. The next [[resume]] starts a
-    * fresh checkpoint whose batch ids are shifted past the lake's highest
-    * committed id ([[Pipeline.batchIdOffset]]), and any events the source
-    * redelivers below the lake's endLsn die on the per-key `lsn > endLsn`
+    * engine is paused, keeping the lakes. The next [[resume]] starts a
+    * fresh checkpoint whose batch ids are shifted past the sink's highest
+    * committed id ([[Pipeline.batchIdOffset]]; the MAX across lakes, so no
+    * lake can swallow a post-rebase batch), and any events the source
+    * redelivers below a lake's endLsn die on its per-key `lsn > endLsn`
     * MERGE guard — replay equality is preserved with ZERO carried dedup
-    * state. Refused while running (the query owns the checkpoint) and on
-    * a lake with no applied position (nothing would guard replays).
+    * state. Refused while running (the query owns the checkpoint) and
+    * while any lake has no applied position (nothing would guard replays).
     */
   def rebaseCheckpoint(): Unit = synchronized {
     require(!isRunning,
       "pause() the stream before rebaseCheckpoint(): the running query " +
         "owns the checkpoint")
-    require(lake.snapshot().endLsn >= 0,
-      "refusing to rebase: the lake has no applied position " +
-        "(nothing would guard replayed events)")
+    require(lakes.forall(_._2.snapshot().endLsn >= 0),
+      "refusing to rebase: a destination lake has no applied position " +
+        "(nothing would guard its replayed events)")
     stateBytes.invalidate() // in-flight polls must not publish a pre-drop size
     CheckpointOps.dropCheckpoint(spark, checkpointDir)
     stateBytes.invalidate() // ...nor a partial size computed mid-delete
@@ -366,31 +390,38 @@ final class Control(
   }
 
   def status(): ControlStatus = {
-    val snap = lake.snapshot()
+    val rows = lakes.map { case (name, lk) =>
+      val s = lk.snapshot()
+      (TableStatus(name, s.version, s.batchId, s.endLsn, s.schemaVersion,
+        s.rowCount, s.lineage.map(_.wallMs).getOrElse(-1L)), s)
+    }
+    val snaps = rows.map(_._2)
+    val backfillDone = snaps.map(_.backfillDone).max
     val stateBytesNow =
       stateBytes.bytesNow(metrics.latest.map(_.tsMs).getOrElse(-1L))
     ControlStatus(
       running = isRunning,
-      snapshotVersion = snap.version,
-      batchId = snap.batchId,
-      endLsn = snap.endLsn,
-      schemaVersion = snap.schemaVersion,
-      backfillDone = snap.backfillDone,
-      rowCount = snap.rowCount,
-      lastBatchWallMs = snap.lineage.map(_.wallMs).getOrElse(-1L),
+      snapshotVersion = snaps.map(_.version).max,
+      batchId = snaps.map(_.batchId).min,
+      endLsn = snaps.map(_.endLsn).min,
+      schemaVersion = snaps.map(_.schemaVersion).max,
+      backfillDone = backfillDone,
+      rowCount = snaps.map(_.rowCount).sum,
+      lastBatchWallMs = rows.map(_._1.lastBatchWallMs).max,
       lastBatchSkippedEvolutions =
-        snap.lineage.map(_.skippedEvolutions).getOrElse(0L),
+        snaps.map(_.lineage.map(_.skippedEvolutions).getOrElse(0L)).sum,
       eventsPerSec = metrics.latest.map(_.eventsPerSec).getOrElse(-1.0),
       lagMs = metrics.latest.map(_.lagMs).getOrElse(-1L),
       backfillTotal = chunkSource.map(_.numChunks).getOrElse(-1),
       snapshotPaused = snapshotPausedFlag,
       state = if (drainingFlag) "draining"
         else if (isRunning) "running" else "paused",
-      stage = if (chunkSource.exists(_.numChunks > snap.backfillDone))
+      stage = if (chunkSource.exists(_.numChunks > backfillDone))
         "snapshot" else "cdc",
       dedupStateBytes = stateBytesNow,
       rebaseRecommended =
-        rebaseThresholdBytes > 0 && stateBytesNow > rebaseThresholdBytes)
+        rebaseThresholdBytes > 0 && stateBytesNow > rebaseThresholdBytes,
+      tables = if (perTable) rows.map(_._1) else Seq.empty)
   }
 
   /** Detach the metrics listener (call when discarding this Control). */

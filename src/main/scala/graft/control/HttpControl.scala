@@ -33,9 +33,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *                     rebaseRecommended once past the configured
   *                     threshold) so operators know when.
   *
-  * Serves the single-table [[Control]] and the multi-table [[MultiControl]]
-  * alike (the [[EngineControl]] verb surface); a multi-table engine's
-  * status adds one `tables` row per destination lake (reference per-table
+  * Serves the [[EngineControl]] verb surface of [[Control]]; a
+  * multi-table engine's status adds one `tables` row per destination lake (reference per-table
   * progress, handlers.rs:255-291).
   *
   * Deliberately JDK-only (com.sun.net.httpserver): the control plane is an

@@ -79,14 +79,10 @@ final class MetricsSampler(queryName: String, maxSamples: Int = 10000)
     val p = e.progress
     if (p.name == queryName) {
       val ts = Instant.parse(p.timestamp).toEpochMilli
-      // event-time high mark: watermark bookkeeping when present (hash
-      // dedup mode), else the pipeline's CollectMetrics observation
-      val observedMax = Option(p.observedMetrics.get("graft_event_time"))
+      // event-time high mark: the pipeline's CollectMetrics observation
+      val lag = Option(p.observedMetrics.get("graft_event_time"))
         .flatMap(r => Option(r.getAs[java.sql.Timestamp]("max_ts")))
-        .map(_.getTime)
-      val lag = Option(p.eventTime.get("max"))
-        .map(m => ts - Instant.parse(m).toEpochMilli)
-        .orElse(observedMax.map(ts - _))
+        .map(ts - _.getTime)
         .getOrElse(-1L)
       val rate =
         if (p.processedRowsPerSecond.isNaN || p.processedRowsPerSecond.isInfinite) 0.0

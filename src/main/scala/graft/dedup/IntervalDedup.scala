@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Range-bucketed bitmap transport dedup — the scalable replacement for
-  * `dropDuplicatesWithinWatermark("lsn")` as the cross-batch at-least-once
+  * Spark's per-key `lsn` dedup as the cross-batch at-least-once
   * collapse (reference contract: at-least-once delivery + idempotent MERGE
   * = effectively-once, docs/architecture.md; offset tracking
   * src/core/position.rs:6-26).
@@ -37,7 +37,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   - An event-time timeout needs a watermark, and a watermark makes
   *     Spark DROP late input rows at this operator — measured here:
   *     segments delivered out of event-time order lost half their events
-  *     to the late filter (the same trap `dropDuplicatesWithinWatermark`
+  *     to the late filter (the same trap Spark's watermarked dedup
   *     has — it eats genuinely-new late rows, not just duplicates). With
   *     no watermark, nothing is ever dropped for lateness.
   *   - A processing-time timeout makes `Trigger.AvailableNow` spin empty
@@ -70,12 +70,12 @@ object IntervalDedup {
   val DefaultShift = 14
 
   /** Per-bucket seen-set over the bucket's `[key << shift,
-    * (key+1) << shift)` lsn range, in one of three roaring-style container
-    * encodings (legacy forms decode unchanged):
+    * (key+1) << shift)` lsn range, in one of two roaring-style container
+    * encodings:
     *
     *   - dense: `words.length == nWords` — the fixed bitmap, one bit per
-    *     lsn slot (what every pre-round-6 checkpoint holds).
-    *   - sparse (self-describing, round-7 writer): 1-3 leading `-shift`
+    *     lsn slot (the writer's form from the size crossover on).
+    *   - sparse (self-describing): 1-3 leading `-shift`
     *     SENTINELS (slot values are non-negative, so the sign
     *     discriminates) followed by the strictly-increasing SET SLOT
     *     VALUES. The sentinel count pads the TOTAL length to a
@@ -84,14 +84,10 @@ object IntervalDedup {
     *     the padding, a shift-14 sparse array of length 16 resumed at
     *     shift 10 would be misread as that shift's dense bitmap. Used
     *     while still strictly shorter than the bitmap. The embedded shift
-    *     makes a different-shift resume LOUD deterministically — the
-    *     round-6 guard was only probabilistic for sparse containers (a
-    *     sparse array from another shift whose slots all fit this shift's
-    *     range decoded silently and mis-mapped lsns).
-    *   - sparse (legacy round-6 writer): `words.length < nWords`,
-    *     non-negative strictly-increasing slot values, no sentinel —
-    *     accepted with the range/order guard (best available for data
-    *     already on disk).
+    *     makes a different-shift resume LOUD deterministically (a
+    *     sentinel-less array from another shift whose slots all fit this
+    *     shift's range would decode silently and mis-map lsns, so every
+    *     sparse container must carry the sentinel).
     *
     * Why sparse at all: measured in BENCH.md round 6, stray lsns far from
     * the dense WAL window (long-lived transactions, hot-key tails) each
@@ -109,12 +105,9 @@ object IntervalDedup {
   /** Expand a stored container to a mutable full bitmap (always a fresh
     * array — the store may hand back the object it retains for the prior
     * version). Loud on anything that is not a valid container for THIS
-    * shift: a sentinel-carrying sparse container embeds its shift
-    * (deterministic check); a checkpoint written under a larger shift
-    * arrives as a too-long array; a legacy smaller-shift bitmap can only
-    * masquerade as legacy sparse by being strictly increasing AND
-    * entirely within this shift's slot range — vanishingly unlikely for
-    * real bitmap words, and checked.
+    * shift: a sparse container must lead with this shift's sentinel
+    * (deterministic check), and a checkpoint written under a larger shift
+    * arrives as a too-long array.
     */
   private def isPow2(n: Int): Boolean = n > 0 && (n & (n - 1)) == 0
 
@@ -129,12 +122,13 @@ object IntervalDedup {
       // sparse container's LENGTH is never a power of two, hence never
       // equals any shift's nWords — a sparse container from shift A can
       // therefore never be misread as a dense bitmap at shift B (every
-      // nWords is a power of two). Legacy round-6 sparse has no sentinel.
+      // nWords is a power of two)
       var from = 0
       while (from < arr.length && arr(from) < 0) {
         require(arr(from) == -shift.toLong && from < 3, mismatch)
         from += 1
       }
+      require(from > 0, mismatch)
       val max = 1L << shift
       val words = new Array[Long](nWords)
       var i = from

@@ -836,7 +836,7 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
 object LakeTable {
   // deliberately NO session tuning here: constructing a table handle in
   // someone else's SparkSession must not mutate their SQL conf — the
-  // engine's own entry points (Pipeline.start/startMulti/runAvailable,
+  // engine's own entry points (Pipeline.startQuery and its callers,
   // the declared queries) call SessionTuning.tune themselves
   def apply(spark: SparkSession, root: String): LakeTable =
     new LakeTable(root, spark.sparkContext.hadoopConfiguration)

@@ -1,18 +1,20 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.apply.{Backfill, MergeApply, MultiApply}
+import graft.apply.Backfill
+import graft.dedup.IntervalDedup
 import graft.lake.LakeTable
-import graft.model.Schemas
+import graft.sink.{Maintenance, MergeSink, Sink}
 
 /** Wiring of the end-to-end streaming pipeline — the Spark collapse of the
   * reference's engine run loop (reference: src/engine/mod.rs:108-288):
   *
-  *   readStream(binlog segments) → watermark + dropDuplicatesWithinWatermark
-  *   → foreachBatch { reconcile → dedup/LWW → COW MERGE → lineage commit }
+  *   binlog segments → IntervalDedup (transport dedup)
+  *   → per micro-batch { sink.applyBatch: reconcile → LWW → COW MERGE →
+  *     lineage commit, then the sink's backfill/maintenance extras }
   *
   * Exactly-once: Structured Streaming WALs source offsets before running a
   * batch (`checkpointLocation`), and the batchId-guarded lineage commit makes
@@ -80,107 +82,28 @@ object Pipeline {
     }
   }
 
-  /** The transport-dedup front end shared by every query shape. Modes:
-    *   - "interval" (default): [[graft.dedup.IntervalDedup]] —
-    *     interval-compressed state, O(lsn-range buckets) instead of
-    *     O(events-in-watermark); the 10^10-event-scale configuration.
-    *     "interval:N" overrides the bucket shift (lsns per bitmap bucket =
-    *     2^N). Measured guidance (BENCH.md round 6): under the adaptive
-    *     sparse/dense container, total state is ~range/8 bytes at ANY
-    *     shift, so the shift is a state-row-count/parallelism knob only —
-    *     the state-size bound is /rebase, not shift. The shift is
-    *     checkpoint-locked like the state partition count — resuming under
-    *     a different one fails loudly (IntervalDedup's word-count guard).
-    *   - "hash": `dropDuplicatesWithinWatermark("lsn")` — Spark's built-in
-    *     one-state-row-per-key dedup, kept for A/B measurement.
-    */
-  private def dedupStage(
-      src: DataFrame,
-      transportDedup: Boolean,
-      dedupImpl: String,
-      watermarkDelay: String): DataFrame =
-    (if (!transportDedup) src
-     else dedupImpl match {
-       // no watermark in interval mode: it needs none for state GC, and an
-       // event-time watermark here would DROP late input rows (the dDWW
-       // trap) instead of deduping them
-       case "interval" => graft.dedup.IntervalDedup.stage(src)
-       case s if s.startsWith("interval:") =>
-         val n = s.stripPrefix("interval:")
-         val shift =
-           try n.toInt
-           catch {
-             case _: NumberFormatException => throw new IllegalArgumentException(
-               s"bad dedupImpl '$s': expected interval:<shift>, e.g. interval:20")
-           }
-         graft.dedup.IntervalDedup.stage(src, shift)
-       case "hash" => src.withWatermark("ts", watermarkDelay)
-         .dropDuplicatesWithinWatermark("lsn")
-       case other => throw new IllegalArgumentException(
-         s"unknown dedupImpl '$other' (expected interval[:shift] | hash)")
-     })
-      // per-batch max event time via CollectMetrics: feeds the A9 lag
-      // metric in every mode (the watermark-derived progress.eventTime
-      // only exists in hash mode)
-      .observe("graft_event_time", max(col("ts")).as("max_ts"))
-
-  /** Inline lake maintenance on the commit thread (the COW analog of the
-    * reference normalizer's DELETE-after-processing cleanup loop,
-    * src/connectors/sinks/postgres/normalizer.rs:169-216): every
-    * `everyBatches` micro-batches, one bucket-selective compaction pass
-    * (bounded by `maxBucketsPerPass`, resumable — the next pass walks the
-    * remaining dirty buckets) plus a vacuum of superseded snapshot metas
-    * and unreferenced files. Tombstones at or below the stream's applied
-    * endLsn are dropped: safe because (a) the `lsn > endLsn` replay guard
-    * means no stream event at or below it can ever re-apply, and (b)
-    * backfill chunks re-read the CURRENT source state, which no longer
-    * contains deleted keys — neither path can resurrect a compacted
-    * delete. Runs on the foreachBatch thread, so it serializes with
-    * commits and the lake's single-writer rule holds by construction (a
-    * long-lived daemon never needs an external maintenance job racing it).
-    */
-  case class Maintenance(
-      everyBatches: Int = 16,
-      fileThreshold: Int = 4,
-      maxBucketsPerPass: Int = 64,
-      keepVersions: Int = 2,
-      vacuumGraceMs: Long = 86400000L) {
-    require(everyBatches > 0, "everyBatches must be positive")
-  }
-
-  private def maintainNow(ss: SparkSession, lake: LakeTable,
-      m: Maintenance): Unit = {
-    val snap = lake.snapshot()
-    lake.compact(ss, snap.endLsn, m.fileThreshold, m.maxBucketsPerPass)
-    lake.vacuum(m.keepVersions, m.vacuumGraceMs)
-    // the per-commit lineage appends (one small json per batch) must not
-    // accumulate one file per commit forever — fold them here too
-    lake.compactLineage()
-    ()
-  }
-
-  private def maintain(ss: SparkSession, lake: LakeTable, batchId: Long,
-      m: Maintenance): Unit =
-    if (batchId > 0 && batchId % m.everyBatches == 0)
-      maintainNow(ss, lake, m)
-
-  /** Start the CDC query over a binlog segment directory.
+  /** Start the CDC query over a binlog segment directory into any
+    * [[graft.sink.Sink]] — the one query builder every entry point uses
+    * (reference: one batching loop handing every flush to one sink,
+    * src/pipeline/mod.rs:57-127):
+    *
+    *   file source(sink.inputSchema) → IntervalDedup → observe(max ts)
+    *   → per micro-batch { sink.applyBatch(batchId + offset) }
+    *
+    * Sink errors propagate — the query fails loudly, the offset WAL is not
+    * advanced past the failed batch, and a restart replays it exactly
+    * (reference invariant src/pipeline/mod.rs:169-185).
     *
     * @param maxFilesPerTrigger micro-batch admission control — the analog of
-    *   the reference's FLUSH_SIZE batching (src/pipeline/mod.rs:57-127,
-    *   default 10,000 rows / 5,000 ms).
+    *   the reference's FLUSH_SIZE batching (default 10,000 rows / 5,000 ms).
     * @param availableNow true = drain all available segments then stop
     *   (tests/bench); false = continuous 5s trigger (the daemon shape).
     * @param transportDedup enable the cross-batch stateful dedup stage
-    *   (`dropDuplicatesWithinWatermark` keyed by the source offset) — state
-    *   is GC'd by the event-time watermark, bounding it at 10^10-event scale.
-    * @param chunkSource when set, concurrent chunked backfill (reference T7):
-    *   after each micro-batch apply, up to `chunksPerBatch` pending snapshot
-    *   chunks are merged under the stream's current applied position as
-    *   their low watermark. Progress persists in the lake snapshot
-    *   (`backfillDone`), so a restart resumes at the next chunk.
+    *   ([[graft.dedup.IntervalDedup]]: interval-compressed state,
+    *   O(lsn-range buckets), no watermark, so late rows are deduped, never
+    *   dropped).
     * @param applyShufflePartitions when set, `spark.sql.shuffle.partitions`
-    *   is switched to this value INSIDE foreachBatch, before the apply plan
+    *   is switched to this value inside each micro-batch, before the apply plan
     *   is built. This decouples the two partition-count decisions a real
     *   deployment makes independently: the stateful dedup's state-store
     *   partition count is locked into the checkpoint at query start (Spark
@@ -189,6 +112,50 @@ object Pipeline {
     *   while the per-batch MERGE jobs should track the CURRENT executor
     *   count. Without this, growing the cluster N→4N either leaves the
     *   merge under-partitioned or is impossible without a new checkpoint.
+    * @param dedupShift lsns per dedup bucket = 2^shift. Measured guidance
+    *   (BENCH.md round 6): under the adaptive sparse/dense container, total
+    *   state is ~range/8 bytes at ANY shift, so the shift is a
+    *   state-row-count/parallelism knob only — the state-size bound is
+    *   /rebase, not shift. Checkpoint-locked like the state partition
+    *   count: resuming under a different shift fails loudly.
+    */
+  def startQuery(
+      spark: SparkSession,
+      binlogDir: String,
+      sink: Sink,
+      checkpointDir: String,
+      maxFilesPerTrigger: Int = 1,
+      availableNow: Boolean = true,
+      transportDedup: Boolean = true,
+      applyShufflePartitions: Option[Int] = None,
+      dedupShift: Int = IntervalDedup.DefaultShift): StreamingQuery = {
+    graft.model.SessionTuning.tune(spark) // engine entry point: own session tuning
+    val src = spark.readStream
+      .schema(sink.inputSchema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(binlogDir)
+    val deduped = if (transportDedup) IntervalDedup.stage(src, dedupShift) else src
+    val idOff = batchIdOffset(spark, checkpointDir, sink.lastBatchId(spark))
+    deduped
+      // per-batch max event time via CollectMetrics: feeds the A9 lag metric
+      .observe("graft_event_time", max(col("ts")).as("max_ts"))
+      .writeStream
+      .queryName("graft-cdc")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val ss = batch.sparkSession
+        applyShufflePartitions.foreach(n =>
+          ss.conf.set("spark.sql.shuffle.partitions", n.toString))
+        sink.applyBatch(ss, batch, batchId + idOff)
+      }
+      .trigger(if (availableNow) Trigger.AvailableNow()
+               else Trigger.ProcessingTime("5 seconds"))
+      .start()
+  }
+
+  /** [[startQuery]] into one lake through a [[MergeSink]] carrying the
+    * interleaved backfill (`chunkSource`, `chunksPerBatch`, `backfillGate`)
+    * and inline `maintenance`.
     */
   def start(
       spark: SparkSession,
@@ -198,149 +165,16 @@ object Pipeline {
       maxFilesPerTrigger: Int = 1,
       availableNow: Boolean = true,
       transportDedup: Boolean = true,
-      watermarkDelay: String = "10 minutes",
       chunkSource: Option[Backfill.ChunkSource] = None,
       chunksPerBatch: Int = 1,
       applyShufflePartitions: Option[Int] = None,
-      dedupImpl: String = "interval",
-      // consulted before each interleaved backfill step: false pauses the
-      // snapshot while the CDC stream keeps flowing (reference
-      // snapshot_pause, handlers.rs:233-245)
+      dedupShift: Int = IntervalDedup.DefaultShift,
       backfillGate: () => Boolean = () => true,
-      maintenance: Option[Maintenance] = None): StreamingQuery = {
-    graft.model.SessionTuning.tune(spark) // engine entry point: own session tuning
-    val src0 = spark.readStream
-      .schema(Schemas.changeEvent)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(binlogDir)
-    val src = dedupStage(src0, transportDedup, dedupImpl, watermarkDelay)
-    val idOff = batchIdOffset(spark, checkpointDir, lake.snapshot().batchId)
-    src.writeStream
-      .queryName("graft-cdc")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        applyShufflePartitions.foreach(n =>
-          ss.conf.set("spark.sql.shuffle.partitions", n.toString))
-        MergeApply.applyBatch(ss, lake, batch, batchId + idOff)
-        // interleaved concurrent backfill: chunks progress between stream
-        // batches (the reference's snapshot/stream scheduling,
-        // src/engine/mod.rs:199-254)
-        chunkSource.foreach { src =>
-          var n = 0
-          while (n < chunksPerBatch && backfillGate() &&
-            Backfill.step(ss, lake, src)) n += 1
-        }
-        maintenance.foreach(maintain(ss, lake, batchId + idOff, _))
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("5 seconds"))
-      .start()
-  }
-
-  /** Sink-generic variant of [[start]]: the same source/dedup front end
-    * feeding any [[graft.sink.Sink]] from the factory (reference:
-    * create_sink dispatch, src/connectors/sinks/mod.rs:57-148). Sink
-    * errors propagate — the query fails loudly, the offset WAL is not
-    * advanced past the failed batch, and a restart replays it exactly
-    * (reference invariant src/pipeline/mod.rs:169-185).
-    */
-  def startWithSink(
-      spark: SparkSession,
-      binlogDir: String,
-      sink: graft.sink.Sink,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 1,
-      availableNow: Boolean = true,
-      transportDedup: Boolean = true,
-      watermarkDelay: String = "10 minutes",
-      applyShufflePartitions: Option[Int] = None,
-      dedupImpl: String = "interval",
-      // inline sink maintenance cadence (sink.maintain on the commit
-      // thread every N batches — for raw-append: normalize fold + staged-
-      // dir compaction + tmp reaping); 0 = off. Same single-writer shape
-      // as the merge path's Maintenance.
-      maintenanceEvery: Int = 0): StreamingQuery = {
-    graft.model.SessionTuning.tune(spark) // engine entry point: own session tuning
-    val src0 = spark.readStream
-      .schema(Schemas.changeEvent)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(binlogDir)
-    val src = dedupStage(src0, transportDedup, dedupImpl, watermarkDelay)
-    val idOff = batchIdOffset(spark, checkpointDir, sink.lastBatchId(spark))
-    src.writeStream
-      .queryName("graft-cdc-sink")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        applyShufflePartitions.foreach(n =>
-          ss.conf.set("spark.sql.shuffle.partitions", n.toString))
-        sink.applyBatch(ss, batch, batchId + idOff)
-        val bid = batchId + idOff
-        if (maintenanceEvery > 0 && bid > 0 && bid % maintenanceEvery == 0)
-          sink.maintain(ss)
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("5 seconds"))
-      .start()
-  }
-
-  /** Multi-table variant of [[start]]: the stream carries a `table` column
-    * and each micro-batch fans out to one MERGE per tracked destination
-    * table (reference: per-table normalizer,
-    * src/connectors/sinks/postgres/normalizer.rs:231-240). Untracked tables
-    * are dropped (P1 tracked-table filter).
-    */
-  def startMulti(
-      spark: SparkSession,
-      binlogDir: String,
-      lakes: Map[String, LakeTable],
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 1,
-      availableNow: Boolean = true,
-      transportDedup: Boolean = true,
-      watermarkDelay: String = "10 minutes",
-      dedupImpl: String = "interval",
-      maintenance: Option[Maintenance] = None,
-      // same decoupling as start(): the dedup state partition count is
-      // checkpoint-locked, the per-table MERGEs must track the CURRENT
-      // executor count across cluster resizes
-      applyShufflePartitions: Option[Int] = None): StreamingQuery = {
-    graft.model.SessionTuning.tune(spark) // engine entry point: own session tuning
-    val src0 = spark.readStream
-      .schema(Schemas.changeEventMulti)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(binlogDir)
-    val src = dedupStage(src0, transportDedup, dedupImpl, watermarkDelay)
-    val idOff = batchIdOffset(spark, checkpointDir,
-      lakes.values.map(_.snapshot().batchId).foldLeft(-1L)(math.max))
-    val maintOrder = lakes.keys.toSeq.sorted
-    src.writeStream
-      .queryName("graft-cdc-multi")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyShufflePartitions.foreach(n => batch.sparkSession.conf
-          .set("spark.sql.shuffle.partitions", n.toString))
-        MultiApply.applyBatch(batch.sparkSession, lakes, batch, batchId + idOff)
-        // staggered maintenance: ONE lake per eligible batch, round-robin
-        // over the tracked tables, so the commit-thread tax stays
-        // O(one table) no matter how wide the fan-out — every lake still
-        // gets a pass every everyBatches × numTables batches
-        maintenance.foreach { m =>
-          val bid = batchId + idOff
-          if (bid > 0 && bid % m.everyBatches == 0 && maintOrder.nonEmpty) {
-            val name = maintOrder(
-              ((bid / m.everyBatches) % maintOrder.size).toInt)
-            maintainNow(batch.sparkSession, lakes(name), m)
-          }
-        }
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("5 seconds"))
-      .start()
-  }
+      maintenance: Option[Maintenance] = None): StreamingQuery =
+    startQuery(spark, binlogDir,
+      MergeSink(lake, chunkSource, chunksPerBatch, backfillGate, maintenance),
+      checkpointDir, maxFilesPerTrigger, availableNow, transportDedup,
+      applyShufflePartitions, dedupShift)
 
   /** Run to completion over currently-available segments (drain). When a
     * `chunkSource` is given, any backfill chunks still pending after the
@@ -356,20 +190,15 @@ object Pipeline {
       chunkSource: Option[Backfill.ChunkSource] = None,
       chunksPerBatch: Int = 1,
       applyShufflePartitions: Option[Int] = None,
-      watermarkDelay: String = "10 minutes",
-      dedupImpl: String = "interval",
+      dedupShift: Int = IntervalDedup.DefaultShift,
       backfillGate: () => Boolean = () => true,
       maintenance: Option[Maintenance] = None): Unit = {
-    val q = start(spark, binlogDir, lake, checkpointDir, maxFilesPerTrigger,
+    val sink = MergeSink(lake, chunkSource, chunksPerBatch, backfillGate,
+      maintenance)
+    startQuery(spark, binlogDir, sink, checkpointDir, maxFilesPerTrigger,
       availableNow = true, transportDedup = transportDedup,
-      watermarkDelay = watermarkDelay,
-      chunkSource = chunkSource, chunksPerBatch = chunksPerBatch,
       applyShufflePartitions = applyShufflePartitions,
-      dedupImpl = dedupImpl, backfillGate = backfillGate,
-      maintenance = maintenance)
-    q.awaitTermination()
-    chunkSource.foreach { src =>
-      while (backfillGate() && Backfill.step(spark, lake, src)) ()
-    }
+      dedupShift = dedupShift).awaitTermination()
+    sink.finishBackfill(spark)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.apply.{MergeApply, MultiApply}
+import graft.apply.{Backfill, MergeApply, MultiApply}
 import graft.dedup.Dedup
 import graft.lake.LakeTable
 import graft.model.{Op, Schemas}
@@ -16,16 +16,26 @@ import graft.model.{Op, Schemas}
 /** A destination for CDC micro-batches — the Spark-side analog of the
   * reference's sink abstraction (`create_sink(&SinkConfig) -> Box<dyn
   * Sink>` dispatching StarRocks / PostgreSQL / Snowflake,
-  * reference: src/connectors/sinks/mod.rs:57-148). Two kinds ship:
+  * reference: src/connectors/sinks/mod.rs:57-148). Three kinds ship:
   *
-  *   - `lake-merge`: the default — LWW reduce + exactly-once COW MERGE
-  *     into a [[LakeTable]] (the reference's MERGE-upsert sinks);
-  *   - `raw-append`: append-only staging of the raw change events with a
-  *     later `normalize` fold — the reference's sync/normalize split
-  *     (raw-table mode + normalizer,
+  *   - [[MergeSink]] (`lake-merge`): the default — LWW reduce +
+  *     exactly-once COW MERGE into a [[LakeTable]] (the reference's
+  *     MERGE-upsert sinks), plus the interleaved backfill and inline
+  *     maintenance;
+  *   - [[MultiSink]]: one MERGE per destination lake, routed by the
+  *     stream's `table` column;
+  *   - [[RawAppendSink]] (`raw-append`): append-only staging of the raw
+  *     change events with a later `normalize` fold — the reference's
+  *     sync/normalize split (raw-table mode + normalizer,
   *     src/connectors/sinks/postgres/raw_table.rs:298-318,
   *     normalizer.rs:169-216), for targets where upserts are expensive
   *     but bulk appends are cheap.
+  *
+  * [[graft.pipeline.Pipeline.startQuery]] feeds every kind through the same
+  * source → dedup → observe front end and hands each micro-batch to
+  * [[applyBatch]]; anything a sink does per batch beyond the apply
+  * (backfill chunks, maintenance) happens inside that call, on the commit
+  * thread, so the sink's single-writer rule holds by construction.
   *
   * Contract: [[applyBatch]] must be idempotent per batchId (a replayed
   * batch is a no-op) and must THROW on failure — the pipeline never
@@ -49,15 +59,45 @@ trait Sink extends Serializable {
     */
   def lastBatchId(spark: SparkSession): Long = -1L
 
-  /** One inline maintenance pass, invoked on the COMMIT THREAD every
-    * `maintenanceEvery` micro-batches by
-    * [[graft.pipeline.Pipeline.startWithSink]] — the analog of the
-    * reference's continuously-running normalizer + DELETE loop
-    * (src/connectors/sinks/postgres/normalizer.rs:102-359). Running on the
-    * commit thread keeps the sink's single-writer rule by construction.
-    * Default: nothing to maintain.
-    */
-  def maintain(spark: SparkSession): Unit = ()
+  /** The change-event envelope the source reads for this sink. */
+  def inputSchema: StructType = Schemas.changeEvent
+}
+
+/** Inline lake maintenance on the commit thread (the COW analog of the
+  * reference normalizer's DELETE-after-processing cleanup loop,
+  * src/connectors/sinks/postgres/normalizer.rs:169-216): every
+  * `everyBatches` micro-batches, one bucket-selective compaction pass
+  * (bounded by `maxBucketsPerPass`, resumable — the next pass walks the
+  * remaining dirty buckets) plus a vacuum of superseded snapshot metas
+  * and unreferenced files. Tombstones at or below the stream's applied
+  * endLsn are dropped: safe because (a) the `lsn > endLsn` replay guard
+  * means no stream event at or below it can ever re-apply, and (b)
+  * backfill chunks re-read the CURRENT source state, which no longer
+  * contains deleted keys — neither path can resurrect a compacted
+  * delete. Runs inside the sink's applyBatch, so it serializes with
+  * commits and the lake's single-writer rule holds by construction (a
+  * long-lived daemon never needs an external maintenance job racing it).
+  */
+case class Maintenance(
+    everyBatches: Int = 16,
+    fileThreshold: Int = 4,
+    maxBucketsPerPass: Int = 64,
+    keepVersions: Int = 2,
+    vacuumGraceMs: Long = 86400000L) {
+  require(everyBatches > 0, "everyBatches must be positive")
+
+  /** True on the batches that get a maintenance pass. */
+  def due(batchId: Long): Boolean = batchId > 0 && batchId % everyBatches == 0
+
+  /** One pass over `lake`: compaction, vacuum, lineage fold. */
+  def run(spark: SparkSession, lake: LakeTable): Unit = {
+    lake.compact(spark, lake.snapshot().endLsn, fileThreshold, maxBucketsPerPass)
+    lake.vacuum(keepVersions, vacuumGraceMs)
+    // the per-commit lineage appends (one small json per batch) must not
+    // accumulate one file per commit forever — fold them here too
+    lake.compactLineage()
+    ()
+  }
 }
 
 /** Declarative sink selection (the reference's `SinkConfig`,
@@ -91,15 +131,87 @@ object Sink {
 }
 
 /** The default sink: the full reconcile → LWW → COW MERGE apply into a
-  * [[LakeTable]] (what `Pipeline.start` always did, now behind the trait).
+  * [[LakeTable]], followed on the same commit thread by its per-batch
+  * extras.
+  *
+  * @param chunkSource when set, concurrent chunked backfill (reference T7):
+  *   after each micro-batch apply, up to `chunksPerBatch` pending snapshot
+  *   chunks are merged under the stream's current applied position as
+  *   their low watermark (the reference's snapshot/stream scheduling,
+  *   src/engine/mod.rs:199-254). Progress persists in the lake snapshot
+  *   (`backfillDone`), so a restart resumes at the next chunk.
+  * @param backfillGate consulted before each interleaved backfill step:
+  *   false pauses the snapshot while the CDC stream keeps flowing
+  *   (reference snapshot_pause, handlers.rs:233-245).
+  * @param maintenance inline compaction + vacuum every N batches.
   */
-final class MergeSink(val lake: LakeTable) extends Sink {
+final case class MergeSink(
+    lake: LakeTable,
+    chunkSource: Option[Backfill.ChunkSource] = None,
+    chunksPerBatch: Int = 1,
+    backfillGate: () => Boolean = () => true,
+    maintenance: Option[Maintenance] = None) extends Sink {
+
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long): Unit = {
     MergeApply.applyBatch(spark, lake, batch, batchId)
-    ()
+    chunkSource.foreach { src =>
+      var n = 0
+      while (n < chunksPerBatch && backfillGate() &&
+        Backfill.step(spark, lake, src)) n += 1
+    }
+    maintenance.filter(_.due(batchId)).foreach(_.run(spark, lake))
   }
+
+  /** Apply every backfill chunk still pending (while the gate is open):
+    * a drain completes the snapshot after the stream has caught up.
+    */
+  def finishBackfill(spark: SparkSession): Unit =
+    chunkSource.foreach { src =>
+      while (backfillGate() && Backfill.step(spark, lake, src)) ()
+    }
+
   def read(spark: SparkSession): DataFrame = lake.read(spark)
   override def lastBatchId(spark: SparkSession): Long = lake.snapshot().batchId
+}
+
+/** Multi-table routing sink: the stream carries a `table` column and each
+  * micro-batch fans out to one MERGE per tracked destination lake via
+  * [[MultiApply]] (reference: per-table normalizer,
+  * src/connectors/sinks/postgres/normalizer.rs:231-240). Untracked tables
+  * are dropped (P1 tracked-table filter).
+  *
+  * Maintenance is staggered: ONE lake per eligible batch, round-robin over
+  * the tracked tables, so the commit-thread tax stays O(one table) no
+  * matter how wide the fan-out — every lake still gets a pass every
+  * `everyBatches × numTables` batches.
+  */
+final class MultiSink(
+    val lakes: Map[String, LakeTable],
+    maintenance: Option[Maintenance] = None) extends Sink {
+  require(lakes.nonEmpty, "MultiSink needs at least one destination lake")
+
+  private val maintOrder = lakes.keys.toSeq.sorted
+
+  override def inputSchema: StructType = Schemas.changeEventMulti
+
+  def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long): Unit = {
+    MultiApply.applyBatch(spark, lakes, batch, batchId)
+    maintenance.filter(_.due(batchId)).foreach { m =>
+      val pass = (batchId / m.everyBatches) % maintOrder.size
+      m.run(spark, lakes(maintOrder(pass.toInt)))
+    }
+  }
+
+  /** Live rows of every lake, tagged with their `table`. */
+  def read(spark: SparkSession): DataFrame =
+    maintOrder.map(t => lakes(t).read(spark).withColumn("table", lit(t)))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** The MAX committed id across lakes: a rebase's shifted batch ids must
+    * clear every lake's replay guard.
+    */
+  override def lastBatchId(spark: SparkSession): Long =
+    lakes.values.map(_.snapshot().batchId).foldLeft(-1L)(math.max)
 }
 
 /** Append-only raw staging: each micro-batch lands as an immutable
@@ -128,12 +240,17 @@ final class MergeSink(val lake: LakeTable) extends Sink {
   * normalize watermark coalesce into one `compacted-<id>` dir (the COW
   * analog of the reference's DELETE-after-normalize,
   * normalizer.rs:169-216), keeping the read path's directory union flat.
+  *
+  * @param maintainEvery run [[maintain]] on the commit thread every N
+  *   micro-batches (0 = off) — a long-lived daemon's staged dirs stay
+  *   bounded by the cadence, not the trigger count.
   */
 final class RawAppendSink(
     val root: String,
     hadoopConf: Configuration,
     schema: StructType = Schemas.transcript,
-    numBuckets: Int = 16)
+    numBuckets: Int = 16,
+    maintainEvery: Int = 0)
     extends Sink {
 
   @transient private lazy val fs: FileSystem =
@@ -232,6 +349,12 @@ final class RawAppendSink(
   }
 
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long): Unit = {
+    stage(batch, batchId)
+    if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
+      maintain(spark)
+  }
+
+  private def stage(batch: DataFrame, batchId: Long): Unit = {
     if (batchId <= compactedUpToCached) return // replay of a compacted batch
     val target = batchDir(batchId)
     if (fs.exists(target)) return // replayed batch: already committed
@@ -559,14 +682,14 @@ final class RawAppendSink(
 
   /** Inline maintenance (daemon shape): fold pending raw batches into the
     * normalized table(s), coalesce the folded batch dirs, reap expired tmp
-    * leftovers. Without this, a long-lived `startWithSink` daemon
+    * leftovers. Without this, a long-lived raw-append daemon
     * accumulates one `batch=` dir per trigger forever (the reference's
     * normalizer loop runs continuously for the same reason,
     * normalizer.rs:102-359). Each step is independently idempotent and
     * crash-safe, so a kill mid-maintenance just leaves work for the next
     * pass.
     */
-  override def maintain(spark: SparkSession): Unit = {
+  def maintain(spark: SparkSession): Unit = {
     normalizeIncremental(spark) // folds eagerly; returned frame unused
     compactRaw(spark)
     vacuumTmp()

@@ -8,6 +8,7 @@ import graft.binlog.{BinlogGen, GenConfig, OracleFold}
 import graft.control.Control
 import graft.lake.LakeTable
 import graft.model.{Op, Schemas, Transcript}
+import graft.sink.MergeSink
 
 /** Control-plane semantics (reference: src/control/): pause/resume against
   * one checkpoint, drain-vs-stop, status, on-demand snapshot trigger, plus
@@ -30,8 +31,8 @@ class ControlSpec extends SparkSpec {
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 4)
 
-    val ctl = new Control(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2)
+    val ctl = new Control(spark, s"$work/binlog", MergeSink(lake),
+      s"$work/ckpt", maxFilesPerTrigger = 2)
     assert(!ctl.status().running)
 
     // drain consumes the whole available log and stops
@@ -84,8 +85,9 @@ class ControlSpec extends SparkSpec {
         half.filter(pmod(hash(col("conv_id")), lit(2)) === i)
       }
     }
-    val ctl = new Control(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, chunkSource = Some(src))
+    val ctl = new Control(spark, s"$work/binlog",
+      MergeSink(lake, chunkSource = Some(src)), s"$work/ckpt",
+      maxFilesPerTrigger = 2)
     ctl.drain()
     val truth = liveState(lake)
     // payload equality: chunk-refreshed rows carry the chunk LW as _lsn
@@ -120,8 +122,8 @@ class ControlSpec extends SparkSpec {
       spark.createDataset(events).toDF(), s"$work/binlog", 4)
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 4)
-    val ctl = new Control(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2)
+    val ctl = new Control(spark, s"$work/binlog", MergeSink(lake),
+      s"$work/ckpt", maxFilesPerTrigger = 2)
     try {
       ctl.drain()
       // the listener bus delivers asynchronously; wait for the samples

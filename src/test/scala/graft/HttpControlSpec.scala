@@ -7,6 +7,7 @@ import graft.binlog.{BinlogGen, GenConfig, OracleFold}
 import graft.control.{Control, HttpControl}
 import graft.lake.LakeTable
 import graft.model.{Schemas, Transcript}
+import graft.sink.{MergeSink, MultiSink}
 
 /** The HTTP ops facade (reference control server parity,
   * src/control/mod.rs:19-32): status/metrics/pause/resume/drain/snapshot
@@ -40,8 +41,8 @@ class HttpControlSpec extends SparkSpec {
       spark.createDataset(events).toDF(), s"$work/binlog", 4)
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 4)
-    val ctl = new Control(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2)
+    val ctl = new Control(spark, s"$work/binlog", MergeSink(lake),
+      s"$work/ckpt", maxFilesPerTrigger = 2)
     val http = new HttpControl(ctl).start()
     try {
       val port = http.boundPort
@@ -130,8 +131,8 @@ class HttpControlSpec extends SparkSpec {
     addSegs(segs.take(4).toSeq)
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 4)
-    val ctl = new Control(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, rebaseThresholdBytes = 1L)
+    val ctl = new Control(spark, s"$work/binlog", MergeSink(lake),
+      s"$work/ckpt", maxFilesPerTrigger = 2, rebaseThresholdBytes = 1L)
     val http = new HttpControl(ctl).start()
     try {
       val port = http.boundPort
@@ -186,7 +187,7 @@ class HttpControlSpec extends SparkSpec {
       "a" -> LakeTable(spark, s"$work/lake-a"),
       "b" -> LakeTable(spark, s"$work/lake-b"))
     lakes.values.foreach(_.create(Schemas.transcript, 4))
-    val ctl = new graft.control.MultiControl(spark, s"$work/binlog", lakes,
+    val ctl = new Control(spark, s"$work/binlog", new MultiSink(lakes),
       s"$work/ckpt", maxFilesPerTrigger = 2)
     val http = new HttpControl(ctl).start()
     try {
@@ -246,8 +247,9 @@ class HttpControlSpec extends SparkSpec {
           .filter(pmod(hash(col("conv_id")), lit(2)) === i)
       }
     }
-    val ctl = new Control(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, chunkSource = Some(src))
+    val ctl = new Control(spark, s"$work/binlog",
+      MergeSink(lake, chunkSource = Some(src)), s"$work/ckpt",
+      maxFilesPerTrigger = 2)
     val http = new HttpControl(ctl).start()
     try {
       val port = http.boundPort

@@ -103,12 +103,15 @@ class IntervalSetSpec extends AnyFunSuite {
       if (enc14.length < (1 << (14 - 6)))
         assert((enc14.length & (enc14.length - 1)) != 0, s"pc=$pc pow2 len")
     }
-    // legacy round-6 sparse containers (no sentinel, strictly-increasing
-    // slots) decode unchanged
+    // a sparse container without the shift sentinel (the old sentinel-less
+    // form) is rejected: without the embedded shift a different-shift
+    // resume could decode silently
     val legacySparse = Array(3L, 64L, 1000L)
-    val lsDec = IntervalDedup.decode(legacySparse, nWords, shift)
-    assert(Seq(3, 64, 1000).forall(s => (lsDec(s >>> 6) & (1L << (s & 63))) != 0))
-    assert(lsDec.map(java.lang.Long.bitCount).sum == 3)
+    val lsErr = intercept[IllegalArgumentException] {
+      IntervalDedup.decode(legacySparse, nWords, shift)
+    }
+    assert(lsErr.getMessage.contains("different shift"),
+      "a sentinel-less sparse container must be rejected loudly")
     // legacy dense containers (every pre-round-6 checkpoint) decode to a
     // CLONE — mutating the result must not reach the stored array
     val legacy = Array.fill(nWords)(rnd.nextLong())
@@ -195,7 +198,7 @@ class IntervalDedupSpec extends SparkSpec {
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 8)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, dedupImpl = "interval")
+      maxFilesPerTrigger = 2)
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 
@@ -220,7 +223,7 @@ class IntervalDedupSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-        maxFilesPerTrigger = 2, dedupImpl = "interval")
+        maxFilesPerTrigger = 2)
     } finally {
       // listener bus is async; drain before asserting
       val deadline = System.currentTimeMillis() + 10000
@@ -253,7 +256,7 @@ class IntervalDedupSpec extends SparkSpec {
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 8)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval")
+      maxFilesPerTrigger = 1)
     assert(liveState(lake) == OracleFold.finalState(events))
     val batchIdBefore = lake.snapshot().batchId
     assert(batchIdBefore >= 3, "fixture must span several batches")
@@ -294,7 +297,7 @@ class IntervalDedupSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-        maxFilesPerTrigger = 2, dedupImpl = "interval")
+        maxFilesPerTrigger = 2)
     } finally {
       val deadline = System.currentTimeMillis() + 10000
       while (maxStateRows < 0 && System.currentTimeMillis() < deadline)
@@ -312,7 +315,7 @@ class IntervalDedupSpec extends SparkSpec {
 
   test("shift 20: checkpoint-locked — mismatched resume fails actionably, " +
       "matching resume stays exact") {
-    // interval:20 = 2^20 lsns per bucket — a state-row-count/parallelism
+    // shift 20 = 2^20 lsns per bucket — a state-row-count/parallelism
     // knob only (BENCH.md round 6: the adaptive container holds total
     // state at ~range/8 at ANY shift); the shift is baked into the
     // checkpointed state like the partition count, so a resume under the
@@ -338,7 +341,7 @@ class IntervalDedupSpec extends SparkSpec {
     fs.mkdirs(new Path(s"$work/binlog"))
     deliver(s"$work/seg-a", "a-", BinlogGen.BaseMs)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval:20")
+      maxFilesPerTrigger = 1, dedupShift = 20)
     assert(liveState(lake) == OracleFold.finalState(firstHalf))
 
     // rest of the log + a redelivered slice: resuming under the DEFAULT
@@ -349,7 +352,7 @@ class IntervalDedupSpec extends SparkSpec {
     deliver(s"$work/seg-b", "b-", BinlogGen.BaseMs + 100000L)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-        maxFilesPerTrigger = 1, dedupImpl = "interval")
+        maxFilesPerTrigger = 1, dedupShift = IntervalDedup.DefaultShift)
     }
     def rootChain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
@@ -359,7 +362,7 @@ class IntervalDedupSpec extends SparkSpec {
     // the failed batch never committed: the matching-shift resume replays
     // it and converges on the full-history oracle
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval:20")
+      maxFilesPerTrigger = 1, dedupShift = 20)
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 
@@ -387,14 +390,14 @@ class IntervalDedupSpec extends SparkSpec {
     fs.mkdirs(new Path(s"$work/binlog"))
     deliver(s"$work/seg-a", "a-", BinlogGen.BaseMs)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval")
+      maxFilesPerTrigger = 1)
     // restart: remaining events + a redelivered slice of the first half
     val rest = events.filterNot(firstHalf.contains) ++ firstHalf.take(30)
     BinlogGen.writeSegments(spark,
       spark.createDataset(rest.sortBy(_.lsn)).toDF(), s"$work/seg-b", 3)
     deliver(s"$work/seg-b", "b-", BinlogGen.BaseMs + 100000L)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval")
+      maxFilesPerTrigger = 1)
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 }

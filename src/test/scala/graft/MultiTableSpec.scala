@@ -7,6 +7,7 @@ import graft.binlog.{BinlogGen, GenConfig, OracleFold}
 import graft.lake.LakeTable
 import graft.model.{Schemas, Transcript}
 import graft.pipeline.Pipeline
+import graft.sink.{Maintenance, MultiSink}
 
 /** Multi-table routing (reference TableRef per record, record.rs:61-77):
   * one stream, one MERGE per tracked destination table, untracked tables
@@ -41,8 +42,8 @@ class MultiTableSpec extends SparkSpec {
       "a" -> LakeTable(spark, s"$work/lake-a"),
       "b" -> LakeTable(spark, s"$work/lake-b"))
     lakes.values.foreach(_.create(Schemas.transcript, 4))
-    val q = Pipeline.startMulti(spark, s"$work/binlog", lakes, s"$work/ckpt",
-      maxFilesPerTrigger = 2)
+    val q = Pipeline.startQuery(spark, s"$work/binlog", new MultiSink(lakes),
+      s"$work/ckpt", maxFilesPerTrigger = 2)
     q.awaitTermination()
 
     for ((name, lake) <- lakes) {
@@ -70,18 +71,17 @@ class MultiTableSpec extends SparkSpec {
       .withColumn("table", when(n % 2 === 0, "a").otherwise("b"))
     BinlogGen.writeSegments(spark, tagged, s"$work/binlog", 6)
 
-    def runInto(suffix: String, maint: Option[Pipeline.Maintenance]) = {
+    def runInto(suffix: String, maint: Option[Maintenance]) = {
       val lakes = Map(
         "a" -> LakeTable(spark, s"$work/lake-a$suffix"),
         "b" -> LakeTable(spark, s"$work/lake-b$suffix"))
       lakes.values.foreach(_.create(Schemas.transcript, 4))
-      Pipeline.startMulti(spark, s"$work/binlog", lakes,
-        s"$work/ckpt$suffix", maxFilesPerTrigger = 2, maintenance = maint)
-        .awaitTermination()
+      Pipeline.startQuery(spark, s"$work/binlog", new MultiSink(lakes, maint),
+        s"$work/ckpt$suffix", maxFilesPerTrigger = 2).awaitTermination()
       lakes
     }
     val plain = runInto("P", None)
-    val kept = runInto("K", Some(Pipeline.Maintenance(everyBatches = 1,
+    val kept = runInto("K", Some(Maintenance(everyBatches = 1,
       fileThreshold = 1, keepVersions = 2, vacuumGraceMs = 0L)))
 
     // routing + fold equality unchanged under maintenance

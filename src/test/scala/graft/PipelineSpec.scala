@@ -6,6 +6,7 @@ import graft.binlog.{BinlogGen, GenConfig, OracleFold}
 import graft.lake.LakeTable
 import graft.model.{Schemas, Transcript}
 import graft.pipeline.Pipeline
+import graft.sink.Maintenance
 
 /** End-to-end Structured Streaming suites: replay equality, kill/resume at
   * batch boundaries, mid-stream schema evolution — the north rule's
@@ -147,25 +148,9 @@ class PipelineSpec extends SparkSpec {
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 
-  test("transport duplicates collapse under the hash dedup too (A/B path)") {
-    // dedupImpl=hash (dropDuplicatesWithinWatermark) stays supported for
-    // A/B measurement and pre-round-4 checkpoints — keep it from rotting
-    val cfg = GenConfig(seed = 17, numConvs = 30, eventsPerConv = 20)
-    val events = BinlogGen.events(cfg)
-    val dup = events ++ events.filter(_.lsn % 7 == 0)
-    val work = tmpDir("stream5h")
-    BinlogGen.writeSegments(spark,
-      spark.createDataset(dup.sortBy(_.lsn)).toDF(), s"$work/binlog", 6)
-    val lake = LakeTable(spark, s"$work/lake")
-    lake.create(Schemas.transcript, 8)
-    Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, dedupImpl = "hash")
-    assert(liveState(lake) == OracleFold.finalState(events))
-  }
-
   test("lsn-ordered redelivery collapses even WITHOUT the stateful dedup") {
     // For an lsn-monotone segment source, at-least-once redelivery is
-    // already effectively-once without dropDuplicatesWithinWatermark:
+    // already effectively-once without the stateful dedup stage:
     // intra-batch duplicates collapse in the idempotent LWW reduce, and
     // cross-batch replays die on the per-event `lsn > endLsn` filter —
     // the reference's own contract (at-least-once + idempotent MERGE, T3).
@@ -202,7 +187,7 @@ class PipelineSpec extends SparkSpec {
     kept.create(Schemas.transcript, 8)
     Pipeline.runAvailable(spark, s"$work/binlog", kept, s"$work/ckptK",
       maxFilesPerTrigger = 2,
-      maintenance = Some(Pipeline.Maintenance(everyBatches = 2,
+      maintenance = Some(Maintenance(everyBatches = 2,
         fileThreshold = 1, keepVersions = 2, vacuumGraceMs = 0L)))
 
     // identical live state — maintenance is invisible to readers
@@ -227,7 +212,7 @@ class PipelineSpec extends SparkSpec {
     val before = liveState(kept)
     Pipeline.runAvailable(spark, s"$work/binlog", kept, s"$work/ckptK",
       maxFilesPerTrigger = 2,
-      maintenance = Some(Pipeline.Maintenance(everyBatches = 2,
+      maintenance = Some(Maintenance(everyBatches = 2,
         fileThreshold = 1, keepVersions = 2, vacuumGraceMs = 0L)))
     assert(liveState(kept) == before)
   }

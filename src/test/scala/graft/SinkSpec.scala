@@ -7,7 +7,7 @@ import graft.binlog.{BinlogGen, GenConfig, OracleFold}
 import graft.lake.LakeTable
 import graft.model.Transcript
 import graft.pipeline.Pipeline
-import graft.sink.{MergeSink, RawAppendSink, Sink, SinkConfig}
+import graft.sink.{MergeSink, MultiSink, RawAppendSink, Sink, SinkConfig}
 
 /** The sink factory (S15) and its contract: kind dispatch, the raw-append
   * sync/normalize split (reference: src/connectors/sinks/mod.rs:57-148,
@@ -48,11 +48,11 @@ class SinkSpec extends SparkSpec {
     // the same stream through BOTH sink kinds, each with its own checkpoint
     val mergeSink = Sink.create(spark,
       SinkConfig("lake-merge", s"$work/lake", numBuckets = 4))
-    Pipeline.startWithSink(spark, s"$work/binlog", mergeSink, s"$work/ckptM",
+    Pipeline.startQuery(spark, s"$work/binlog", mergeSink, s"$work/ckptM",
       maxFilesPerTrigger = 2).awaitTermination()
     val rawSink = Sink.create(spark, SinkConfig("raw-append", s"$work/raw"))
       .asInstanceOf[RawAppendSink]
-    Pipeline.startWithSink(spark, s"$work/binlog", rawSink, s"$work/ckptR",
+    Pipeline.startQuery(spark, s"$work/binlog", rawSink, s"$work/ckptR",
       maxFilesPerTrigger = 2).awaitTermination()
 
     // raw log is faithful: every event (incl. the ddl row) landed
@@ -61,6 +61,48 @@ class SinkSpec extends SparkSpec {
       Map("tool" -> cfg.addToolAtLsn.get))
     assert(payload(rawSink.normalize(spark)) == payloadOf(oracle))
     assert(payload(mergeSink.read(spark)) == payloadOf(oracle))
+  }
+
+  test("every sink shares the one dedup front end: redelivered events " +
+      "reach no sink twice") {
+    import org.apache.spark.sql.functions.{col, substring, when}
+    val cfg = GenConfig(seed = 61, numConvs = 50, eventsPerConv = 30,
+      pctUpdate = 0.3, pctDelete = 0.1,
+      addToolAtLsn = Some(2L * 50 * 30 / 4 + 1))
+    val events = BinlogGen.events(cfg)
+    // at-least-once transport: a slice of the log is delivered twice
+    val dup = events ++ events.filter(_.lsn % 7 == 0)
+    val work = tmpDir("sinkdedup")
+    // one segment set for all three sinks: the single-table envelope
+    // ignores the `table` column the multi-table sink routes on
+    val n = substring(col("conv_id"), 6, 8).cast("int")
+    BinlogGen.writeSegments(spark,
+      spark.createDataset(dup.sortBy(_.lsn)).toDF()
+        .withColumn("table", when(n % 2 === 0, "a").otherwise("b")),
+      s"$work/binlog", 6)
+
+    val merge = Sink.create(spark,
+      SinkConfig("lake-merge", s"$work/lake", numBuckets = 4))
+    val raw = new RawAppendSink(s"$work/raw",
+      spark.sparkContext.hadoopConfiguration)
+    val lakes = Seq("a", "b").map { t =>
+      val l = LakeTable(spark, s"$work/lake-$t")
+      l.create(graft.model.Schemas.transcript, 4)
+      t -> l
+    }.toMap
+    val multi = new MultiSink(lakes)
+    for ((sink, ckpt) <- Seq(merge -> "ckptM", raw -> "ckptR", multi -> "ckptX"))
+      Pipeline.startQuery(spark, s"$work/binlog", sink, s"$work/$ckpt",
+        maxFilesPerTrigger = 2).awaitTermination()
+
+    // the raw log is the dedup stage's output verbatim: each lsn once
+    val lsns = raw.read(spark).select("lsn").as[Long].collect()
+    assert(lsns.length == events.size && lsns.distinct.length == events.size)
+    val oracle = payloadOf(OracleFold.finalState(events,
+      Map("tool" -> cfg.addToolAtLsn.get)))
+    assert(payload(raw.normalize(spark)) == oracle)
+    assert(payload(merge.read(spark)) == oracle)
+    assert(payload(multi.read(spark)) == oracle)
   }
 
   test("normalize with a narrower configured schema still emits ddl-added columns") {
@@ -354,7 +396,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("daemon-shaped raw-append: inline maintenance bounds the staged dirs") {
-    // the long-lived startWithSink shape: without inline maintenance a
+    // the long-lived raw-append daemon shape: without inline maintenance a
     // raw-append daemon accumulates one batch= dir per trigger forever
     // (the reference's normalizer+DELETE loop runs continuously for the
     // same reason, normalizer.rs:102-359)
@@ -364,10 +406,10 @@ class SinkSpec extends SparkSpec {
     val work = tmpDir("sinkdaemon")
     BinlogGen.writeSegments(spark,
       spark.createDataset(events).toDF(), s"$work/binlog", 10)
-    val raw = Sink.create(spark, SinkConfig("raw-append", s"$work/raw"))
-      .asInstanceOf[RawAppendSink]
-    Pipeline.startWithSink(spark, s"$work/binlog", raw, s"$work/ckpt",
-      maxFilesPerTrigger = 1, maintenanceEvery = 3).awaitTermination()
+    val raw = new RawAppendSink(s"$work/raw",
+      spark.sparkContext.hadoopConfiguration, maintainEvery = 3)
+    Pipeline.startQuery(spark, s"$work/binlog", raw, s"$work/ckpt",
+      maxFilesPerTrigger = 1).awaitTermination()
     // ~10 triggers with a maintenance pass every 3: the staged-dir count
     // is bounded by the cadence, not the trigger count
     val fs = new org.apache.hadoop.fs.Path(s"$work/raw")
@@ -412,7 +454,7 @@ class SinkSpec extends SparkSpec {
 
     // the failure propagates: the query dies, nothing is swallowed
     val ex = intercept[StreamingQueryException] {
-      Pipeline.startWithSink(spark, s"$work/binlog", failing, s"$work/ckpt",
+      Pipeline.startQuery(spark, s"$work/binlog", failing, s"$work/ckpt",
         maxFilesPerTrigger = 2).awaitTermination()
     }
     assert(ex.getMessage.contains("injected sink failure") ||
@@ -424,7 +466,7 @@ class SinkSpec extends SparkSpec {
     // restart against the same checkpoint: the offset WAL replays the
     // failed batch; the run completes with the exact oracle state —
     // no loss, no duplication
-    Pipeline.startWithSink(spark, s"$work/binlog", failing, s"$work/ckpt",
+    Pipeline.startQuery(spark, s"$work/binlog", failing, s"$work/ckpt",
       maxFilesPerTrigger = 2).awaitTermination()
     assert(payload(lake.read(spark)) == payloadOf(OracleFold.finalState(events)))
   }
