@@ -3,32 +3,24 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.apply.MultiApply
 import graft.binlog.{BinlogGen, GenConfig}
 import graft.lake.LakeTable
 import graft.model.Schemas
 
-/** Wall-time A/B for the multi-table fan-out: the same N-table micro-batch
-  * applied with sequential vs concurrent per-table MERGEs (round-3 "what's
-  * wrong" #2 — at reference-like table counts, sequential apply pays one
-  * serial commit round per table). Prints one JSON line with both walls
-  * and the per-table row counts so correctness is visible alongside.
-  *
-  *   scripts/run.sh graft.MultiBench --tables 8 --convs 8000
-  *
-  * `--daemon` switches to the wide-fan-out daemon shape (the reference ran
-  * 40 single-table daemons per host — multitenant footprint benchmark,
-  * /root/reference/benchmarks/2026-04-13-cdc-footprint-multitenant.md; here
-  * ONE streaming query fans out to all lakes): N micro-batches through
+/** Wide-fan-out daemon measurement for multi-table routing (the reference
+  * ran 40 single-table daemons per host in its multitenant footprint
+  * benchmark; here ONE streaming query fans out to all lakes): N
+  * micro-batches through
   * [[graft.pipeline.Pipeline.startQuery]] and a [[graft.sink.MultiSink]]
   * over `--tables` destination lakes with staggered
   * inline maintenance, reporting wall, events/s, per-lake version counts
   * (bounded by the stagger + vacuum) and total live rows. The per-table
   * correctness of this exact shape is HttpControlSpec's multi-table test;
   * this measures whether the shared-pool fan-out + O(one-table)
-  * maintenance tax hold at 100+ tables.
+  * maintenance tax hold at 100+ tables. (Sequential vs concurrent
+  * per-table apply is settled: BENCH.md "Multi-table fan-out A/B".)
   *
-  *   scripts/run.sh graft.MultiBench --daemon --tables 120 --convs 24000
+  *   scripts/run.sh graft.MultiBench --tables 120 --convs 24000
   */
 object MultiBench {
   def main(args: Array[String]): Unit = {
@@ -38,54 +30,6 @@ object MultiBench {
     val epc = opt.getOrElse("--events-per-conv", "30").toInt
     val cpus = opt.getOrElse("--cpus", "8").toInt
     val work = opt.getOrElse("--work", "/tmp/graft-multibench")
-    if (args.contains("--daemon")) { runDaemon(opt, tables, convs, epc, cpus, work); return }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (2 * cpus).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    val cfg = GenConfig(seed = 42, numConvs = convs, eventsPerConv = epc)
-    val n = substring(col("conv_id"), 6, 8).cast("int")
-    val batch = BinlogGen.eventsDs(spark, cfg).toDF()
-      .withColumn("table", concat(lit("t"), (n % tables).cast("string")))
-      .persist()
-    batch.count()
-
-    def run(tag: String, maxConcurrent: Int): (Double, Seq[Long]) = {
-      val fs = new org.apache.hadoop.fs.Path(work)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$work/$tag"), true)
-      val lakes = (0 until tables).map { i =>
-        val l = LakeTable(spark, s"$work/$tag/lake-$i")
-        l.create(Schemas.transcript, 8)
-        s"t$i" -> l
-      }.toMap
-      val t0 = System.nanoTime()
-      MultiApply.applyBatch(spark, lakes, batch, 0L,
-        maxConcurrent = maxConcurrent)
-      val sec = (System.nanoTime() - t0) / 1e9
-      (sec, (0 until tables).map(i => lakes(s"t$i").read(spark).count()))
-    }
-    run("warm", 1) // JIT/codegen warmup pass, not reported
-    val (seqSec, seqRows) = run("seq", 1)
-    val (conSec, conRows) = run("con", 8)
-    require(seqRows == conRows, s"row mismatch: $seqRows vs $conRows")
-    println(s"""{"bench":"multi-table","tables":$tables,""" +
-      s""""events":${cfg.totalEvents},"sequentialSec":$seqSec,""" +
-      s""""concurrentSec":$conSec,""" +
-      f""""speedup":${seqSec / conSec}%.2f,""" +
-      s""""rowsPerTable":[${seqRows.mkString(",")}]}""")
-    spark.stop()
-  }
-
-  /** The wide-fan-out daemon measurement (see object doc). */
-  private def runDaemon(opt: Map[String, String], tables: Int, convs: Int,
-      epc: Int, cpus: Int, work: String): Unit = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", (2 * cpus).toString)

@@ -18,10 +18,14 @@ import graft.lake.LakeTable
   */
 object MultiApply {
 
+  // Per-batch bound on concurrent per-table MERGE jobs, so a wide table
+  // set can't oversubscribe the scheduler.
+  private val MaxConcurrent = 8
+
   // One long-lived daemon pool shared by every multi-table apply: at a 5 s
   // trigger, creating and tearing down a pool per micro-batch was constant
   // allocator churn (round-4 audit). Sized to the host; per-call
-  // concurrency is bounded separately by a semaphore so maxConcurrent
+  // concurrency is bounded separately by a semaphore so MaxConcurrent
   // still holds per batch.
   private lazy val pool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newCachedThreadPool(
@@ -43,15 +47,13 @@ object MultiApply {
     * independent snapshot logs, so their commits don't contend): at
     * reference-like 25 tables, sequential apply paid 25 serial commit
     * rounds of small-stage job time per micro-batch — the serial floor the
-    * round-3 audit flagged. `maxConcurrent` bounds the job fan-out so a
-    * wide table set can't oversubscribe the scheduler.
+    * round-3 audit flagged. At most `MaxConcurrent` run at once.
     */
   def applyBatch(
       spark: SparkSession,
       lakes: Map[String, LakeTable],
       batch: DataFrame,
-      batchId: Long,
-      maxConcurrent: Int = 8): Long = {
+      batchId: Long): Long = {
     // Persist once: every tracked table re-reads the batch for its own
     // filtered MERGE — without the cache that is one source scan per table
     // (at reference-like 25 tables, 25 scans of the same micro-batch).
@@ -78,17 +80,17 @@ object MultiApply {
           s"multi-table apply batch $batchId: $skipped events dropped " +
             s"(untracked destination tables; tracked=${lakes.keySet.toSeq.sorted.mkString(",")})")
       val targets = present.filter(tracked).sorted
-      if (targets.size <= 1 || maxConcurrent <= 1) {
+      if (targets.size <= 1) {
         for (t <- targets)
           MergeApply.applyBatch(spark, lakes(t),
             cached.filter(col("table") === t).drop("table"), batchId)
       } else {
-        val gate = new java.util.concurrent.Semaphore(maxConcurrent)
+        val gate = new java.util.concurrent.Semaphore(MaxConcurrent)
         val futures = targets.map { t =>
           // throttle at SUBMISSION, not inside the task: a wide table set
           // (hundreds of targets) must not fan out one parked pool thread
           // per target — with the permit held before submit, the shared
-          // cached pool never holds more than maxConcurrent threads
+          // cached pool never holds more than MaxConcurrent threads
           gate.acquire()
           pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit =

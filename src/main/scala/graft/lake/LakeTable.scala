@@ -5,7 +5,9 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -47,7 +49,7 @@ case class Snapshot(
     lineage: Option[LineageEntry],
     files: Seq[DataFileEntry],
     // cumulative per-bucket row counts (incl. tombstones), maintained across
-    // COW commits from each write job's post-write stats scan — the A3
+    // COW commits from each write's observed stats aggregate — the A3
     // row-count estimate (reference: footer-count probe,
     // src/engine/snapshot/chunker.rs:96-158)
     bucketRowCounts: Map[Int, Long] = Map.empty,
@@ -56,28 +58,21 @@ case class Snapshot(
     // (src/control/state.rs:200-310)
     backfillDone: Int = 0,
     // Iceberg-style manifest-list indirection: bucket -> relPath of the
-    // per-bucket manifest file listing that bucket's data files. The meta
-    // file then carries O(numBuckets) manifest lines instead of O(files)
-    // file lines, and a commit rewrites ONLY the touched buckets'
+    // per-bucket manifest file listing that bucket's data files. Every data
+    // file is covered: the meta file carries O(numBuckets) manifest lines
+    // and no file lines, and a commit rewrites ONLY the touched buckets'
     // manifests — the 10^5-commits × 10^6-files metadata wall flagged in
-    // round 2. `files` always holds the RESOLVED list in memory
-    // (readSnapshot resolves manifests); buckets absent from this map have
-    // their files inlined in the meta (legacy/empty-table form).
+    // round 2. `files` holds the RESOLVED list in memory (readSnapshot
+    // resolves manifests); buckets without files are absent.
     bucketManifests: Map[Int, String] = Map.empty,
     // per-bucket MIN `_lsn` among delete tombstones (buckets with none are
-    // absent) — maintained across COW commits from each write job's
-    // post-write stats scan, exactly like bucketRowCounts. This
+    // absent) — maintained across COW commits from the same observed
+    // aggregate as bucketRowCounts. This
     // is what lets compaction SELECT dirty buckets (minTombLsn <= horizon)
     // instead of rewriting the whole table — the COW analog of the
     // reference's O(processed-range) DELETE-after-normalize
     // (src/connectors/sinks/postgres/normalizer.rs:169-216).
-    bucketTombMinLsn: Map[Int, Long] = Map.empty,
-    // false only for metas written before the tombstone index existed: an
-    // EMPTY bucketTombMinLsn is ambiguous there (no tombstones vs not
-    // indexed), so compaction must fall back to considering every
-    // file-bearing bucket once. New metas always carry the `btminv`
-    // marker, making the empty map trustworthy.
-    tombIndexed: Boolean = true) {
+    bucketTombMinLsn: Map[Int, Long] = Map.empty) {
   def schema: StructType = schemas(schemaVersion)
   def rowCount: Long = bucketRowCounts.values.sum
 }
@@ -92,6 +87,10 @@ case class Snapshot(
   * Layout:
   * {{{
   *   <root>/_log/v%012d.meta     — snapshot log, one file per commit
+  *   <root>/_manifests/m%012d-<b>-<uuid>.mf — one bucket's file list
+  *   <root>/_lineage/v%012d.json — one row per commit that carries
+  *                                 lineage (folded into c-<uuid>.json
+  *                                 by compactLineage)
   *   <root>/data/cNNN-<uuid>/_bucket=<b>/part-*.parquet   — one dir per commit
   * }}}
   *
@@ -100,15 +99,18 @@ case class Snapshot(
   *   1. write data files under a commit-unique directory (attempt-unique
   *      names: orphans from a failed commit are invisible — no manifest
   *      references them — and a retry can never collide with them);
-  *   2. write the snapshot meta to a temp name and rename it to v%012d.meta
+  *   2. write one new manifest per touched bucket (invisible until a meta
+  *      references it);
+  *   3. write the snapshot meta to a temp name and rename it to v%012d.meta
   *      with no-overwrite semantics. Readers only ever see fully-committed
-  *      versions.
+  *      versions;
+  *   4. append the commit's lineage row (see `appendLineage`).
   *
-  * Scale path: the snapshot file holds the full file manifest — one manifest
-  * line per data file. At 100 TB (~10^5-10^6 files) this stays a driver-side
-  * metadata read of tens of MB; the natural evolution is Iceberg-style
-  * manifest-list indirection, which this format is forward-compatible with
-  * (a `file=` line can point at a manifest instead).
+  * Scale path: the meta holds O(numBuckets) lines — one manifest path,
+  * row count and tombstone min per bucket — and never a per-file line, so
+  * a commit's metadata IO is O(touched buckets) however many files the
+  * table holds (10^5-10^6 at 100 TB). Per-bucket stats come from the
+  * write job itself (see `writeDataFiles`).
   */
 final class LakeTable(val root: String, hadoopConf: Configuration)
     extends Serializable {
@@ -180,24 +182,21 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
   def readSnapshot(version: Long): Snapshot = {
     metaFileReads += 1
     val snap = SnapshotCodec.decode(readTextFile(metaPath(version)))
-    if (snap.bucketManifests.isEmpty) snap
-    else {
-      if (manifestCache.size > math.max(1024, 4 * snap.numBuckets))
-        manifestCache.clear()
-      val resolved = snap.bucketManifests.toSeq.sortBy(_._1)
-        .flatMap { case (b, rel) =>
-          manifestCache.computeIfAbsent(rel, { _ =>
-            manifestFileReads += 1
-            readTextFile(new Path(root, rel)).split('\n').filter(_.nonEmpty)
-              .toSeq.map { line =>
-                val i = line.indexOf('|')
-                DataFileEntry(b, line.substring(0, i).toInt,
-                  line.substring(i + 1))
-              }
-          })
-        }
-      snap.copy(files = snap.files ++ resolved)
-    }
+    if (manifestCache.size > math.max(1024, 4 * snap.numBuckets))
+      manifestCache.clear()
+    val resolved = snap.bucketManifests.toSeq.sortBy(_._1)
+      .flatMap { case (b, rel) =>
+        manifestCache.computeIfAbsent(rel, { _ =>
+          manifestFileReads += 1
+          readTextFile(new Path(root, rel)).split('\n').filter(_.nonEmpty)
+            .toSeq.map { line =>
+              val i = line.indexOf('|')
+              DataFileEntry(b, line.substring(0, i).toInt,
+                line.substring(i + 1))
+            }
+        })
+      }
+    snap.copy(files = resolved)
   }
 
   private def readTextFile(p: Path): String = {
@@ -318,12 +317,7 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
       backfillDone = backfillDone.getOrElse(base.backfillDone),
       bucketManifests = manifests,
       bucketTombMinLsn =
-        (base.bucketTombMinLsn -- touchedBuckets) ++ tombMinByBucket,
-      // a legacy (unindexed) table becomes indexed only once a commit has
-      // recomputed stats for EVERY file-bearing bucket (the upgrade
-      // compact pass); partial commits inherit the legacy status
-      tombIndexed = base.tombIndexed ||
-        (base.files.map(_.bucket).toSet -- touchedBuckets).isEmpty)
+        (base.bucketTombMinLsn -- touchedBuckets) ++ tombMinByBucket)
     writeSnapshot(next)
     next
   }
@@ -402,20 +396,9 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
     * row counts and min tombstone lsns. One shuffle, partitioned by bucket,
     * so each task writes one bucket directory.
     *
-    * Stats path is bucket-count-adaptive (guide §1/§2: derive the plan from
-    * the data, don't pay a fixed tax):
-    *   - numBuckets ≤ [[LakeTable.observeStatsMaxBuckets]] (default 64):
-    *     per-bucket count/tomb-min ride the WRITE job as `observe`
-    *     aggregates — ~2·numBuckets cheap conditional aggregates per row,
-    *     zero extra Spark jobs per commit (the round-6 profile showed the
-    *     follow-up stats scan costing one full job + a parquet re-read per
-    *     commit, ~1/3 of every commit's job count);
-    *   - wider tables fall back to the FOLLOW-UP groupBy scan over the
-    *     just-written files (a pruned 2-column columnar read of page-cache-
-    *     hot data): per-bucket observe expressions at the 10^4-10^5 buckets
-    *     a 100 TB table wants would put tens of thousands of branch
-    *     evaluations into the write hot loop, while the scan stays O(rows)
-    *     regardless of bucket count.
+    * The stats ride the WRITE job as its only `observe` metric: one
+    * [[BucketStats]] aggregate whose update is O(1) per row at any bucket
+    * count, so no second job reads the written files back.
     *
     * Files land under a commit-unique directory and keep the final names
     * Spark gave them — no driver rename pass (serial at 10^4-10^5 files, and
@@ -433,72 +416,40 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
       bucketExpr(numBuckets).as("_bucket")
     val parts = math.max(1, math.min(touched.size,
       spark.sessionState.conf.numShufflePartitions))
-    val hasAudit = schema.fieldNames.contains("_op") &&
-      schema.fieldNames.contains("_lsn")
-    val prepared = df.select(cols: _*)
-    val useObserve = numBuckets <= LakeTable.observeStatsMaxBuckets
-    val statsObs = if (useObserve) Some(new org.apache.spark.sql.Observation())
-      else None
+    val obs = new org.apache.spark.sql.Observation()
+    val tombLsn = coalesce(when(col("_op") === 2, col("_lsn")),
+      lit(BucketStats.NoTomb))
     // the observe node sits ABOVE the repartition exchange, i.e. in the
     // WRITE (result) stage: result-stage accumulator updates are applied
     // exactly once per task even under retries/speculation, while a
     // map-stage CollectMetrics would double-count rows whose shuffle
     // output is recomputed after a fetch failure
-    val repartitioned = prepared.repartition(parts, col("_bucket"))
-    val toWrite = statsObs.fold(repartitioned) { obs =>
-      val aggs = (0 until numBuckets).flatMap { b =>
-        count(when(col("_bucket") === b, 1)).as(s"n$b") +: (
-          if (hasAudit)
-            Seq(min(when(col("_bucket") === b && col("_op") === 2,
-              col("_lsn"))).as(s"t$b"))
-          else Seq.empty)
-      }
-      repartitioned.observe(obs, aggs.head, aggs.tail: _*)
-    }
-    toWrite
+    df.select(cols: _*)
+      .repartition(parts, col("_bucket"))
+      .observe(obs,
+        udaf(new BucketStats(numBuckets)).apply(col("_bucket"), tombLsn)
+          .as("stats"))
       .write.partitionBy("_bucket").mode("overwrite")
       .parquet(out.toString)
-    // An EMPTY write can lose its CollectMetrics node to
-    // PropagateEmptyRelation (the observation then completes with an empty
-    // row) — empty input ⇒ empty stats, correct by construction. A missing
-    // metric on a NON-empty write falls through to the follow-up scan.
-    val observed = statsObs.map(_.get).filter(_.contains("n0"))
-    val (rowsByBucket, tombMinByBucket) = observed match {
-      case Some(m) =>
-        val rows = (0 until numBuckets)
-          .map(b => b -> m(s"n$b").asInstanceOf[Long])
-          .filter(_._2 > 0).toMap
-        val tomb =
-          if (!hasAudit) Map.empty[Int, Long]
-          else (0 until numBuckets).flatMap { b =>
-            Option(m(s"t$b")).map(v => b -> v.asInstanceOf[Long])
-          }.toMap
-        (rows, tomb)
-      case None =>
-        // per-bucket row counts + min tombstone lsn (the compaction
-        // dirty-bucket index) from the written files: `_bucket` is
-        // recovered as the partition column, `_op`/`_lsn` a pruned read
-        val statCols =
-          if (hasAudit)
-            Seq(count(lit(1)).as("n"),
-              min(when(col("_op") === 2, col("_lsn"))).as("tomb"))
-          else Seq(count(lit(1)).as("n"), lit(null).cast("long").as("tomb"))
-        // a zero-row write leaves no _bucket= dirs (nothing to read)
-        val hasData = fs.exists(out) &&
-          fs.listStatus(out).exists(_.getPath.getName.startsWith("_bucket="))
-        val stats =
-          if (hasData)
-            spark.read.parquet(out.toString)
-              .groupBy(col("_bucket").cast("int").as("b"))
-              .agg(statCols.head, statCols.tail: _*)
-              .collect()
-          else Array.empty[org.apache.spark.sql.Row]
-        (stats.map(r => r.getInt(0) -> r.getLong(1)).filter(_._2 > 0).toMap,
-          stats.flatMap(r =>
-            if (r.isNullAt(2)) None else Some(r.getInt(0) -> r.getLong(2)))
-            .toMap)
+    val bucketDirs = fs.listStatus(out).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("_bucket="))
+    // an EMPTY write may lose its CollectMetrics node to
+    // PropagateEmptyRelation (the observation then completes without the
+    // metric): no bucket dirs ⇒ empty stats, correct by construction
+    val stats: Array[Long] = obs.get.get("stats") match {
+      case Some(a: scala.collection.Seq[_]) => a.map(_.asInstanceOf[Long]).toArray
+      case _ if bucketDirs.isEmpty => new BucketStats(numBuckets).zero
+      case other => throw new IllegalStateException(
+        s"write stats missing for $out (observed: $other)")
     }
-    val entries = fs.listStatus(out).filter(_.isDirectory).toSeq.flatMap { bd =>
+    val rowsByBucket = (0 until numBuckets).collect {
+      case b if stats(b) > 0 => b -> stats(b)
+    }.toMap
+    val tombMinByBucket = (0 until numBuckets).collect {
+      case b if stats(numBuckets + b) != BucketStats.NoTomb =>
+        b -> stats(numBuckets + b)
+    }.toMap
+    val entries = bucketDirs.flatMap { bd =>
       val b = bd.getPath.getName.stripPrefix("_bucket=").toInt
       fs.listStatus(bd.getPath).toSeq
         .filter(_.getPath.getName.endsWith(".parquet"))
@@ -509,7 +460,7 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
     (entries, rowsByBucket, tombMinByBucket)
   }
 
-  /** Atomic snapshot commit (step 2 of the protocol): temp write, then a
+  /** Atomic snapshot commit (step 3 of the protocol): temp write, then a
     * no-overwrite rename via FileContext (Options.Rename.NONE) — two racing
     * committers cannot both succeed; the loser gets FileAlreadyExists
     * instead of silently clobbering the winner's manifest. Single-writer is
@@ -620,24 +571,13 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
       maxBuckets: Int = Int.MaxValue): (Snapshot, Set[Int]) = {
     val snap = snapshot()
     val filesPerBucket = snap.files.groupBy(_.bucket).view.mapValues(_.size)
-    val tombDirty =
-      if (!snap.tombIndexed)
-        // legacy meta (pre-index): an empty map means "unknown", not
-        // "clean" — consider every file-bearing bucket once; the rewrite
-        // commits an indexed meta, so the next call is O(dirty) again
-        snap.files.map(_.bucket).toSet
-      else snap.bucketTombMinLsn.collect {
-        case (b, minLsn) if minLsn <= horizonLsn => b
-      }.toSet
+    val tombDirty = snap.bucketTombMinLsn.collect {
+      case (b, minLsn) if minLsn <= horizonLsn => b
+    }.toSet
     val fileDirty = filesPerBucket.collect {
       case (b, n) if n > fileThreshold => b
     }.toSet
-    // legacy upgrade pass ignores maxBuckets: the rewritten meta carries
-    // the index marker, so a PARTIAL pass would wrongly certify the
-    // untouched buckets as indexed-and-clean
-    val selected =
-      if (!snap.tombIndexed) tombDirty ++ fileDirty
-      else (tombDirty ++ fileDirty).toSeq.sorted.take(maxBuckets).toSet
+    val selected = (tombDirty ++ fileDirty).toSeq.sorted.take(maxBuckets).toSet
     if (selected.isEmpty) return (snap, Set.empty)
     val kept = readFiles(spark, snap, Some(selected))
       .filter(!(col("_op") === 2 && col("_lsn") <= horizonLsn))
@@ -740,13 +680,14 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
     * table — ONE distributed scan, no driver-side decode of every snapshot
     * meta (the round-4 audit's O(versions)-sequential-FS-reads wall) — and
     * history survives [[vacuum]], which GCs metas but never lineage.
-    * Tables created before the lineage table existed (no `_lineage/` dir)
-    * fall back to the legacy snapshot-log derivation.
+    * Retained metas below the table's floor (or all of them, while no
+    * `_lineage/` dir exists) contribute meta-derived rows: a kill between
+    * a first commit's meta rename and its lineage append leaves that row
+    * only in the meta.
     */
   def lineageDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // legacy derivation: decode retained snapshot metas (tables written
-    // before the _lineage table existed, or versions below its floor)
+    // decode retained snapshot metas (versions below the lineage floor)
     def fromMetas(versions: Seq[Long]): DataFrame =
       versions.sorted.map(readSnapshot).flatMap { s =>
         s.lineage.map(l => (s.version, l.batchId, l.startLsn, l.endLsn,
@@ -760,22 +701,21 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
     // the combined file and a not-yet-deleted original — reads stay
     // exact through every crash window
     // the isNotNull guard drops any all-null row a PERMISSIVE read makes
-    // of a corrupt/legacy-truncated file, so it can never shadow a real
+    // of a corrupt/torn file, so it can never shadow a real
     // version inside dropDuplicates
     val t = spark.read.schema(lineageSchema).json(lineageDir.toString)
       .filter(col("snapshot_version").isNotNull)
       .dropDuplicates("snapshot_version")
-    // upgrade path: commits made before the lineage table's first append
-    // exist only in their snapshot metas — merge the retained ones below
-    // the table's floor instead of silently truncating history (vacuumed
-    // metas stay gone, exactly as under the legacy derivation)
+    // commits below the lineage table's floor exist only in their snapshot
+    // metas — merge the retained ones instead of silently truncating
+    // history (vacuumed metas stay gone)
     val floorRow = t.agg(min(col("snapshot_version"))).head()
     val floor = if (floorRow.isNullAt(0)) Long.MaxValue else floorRow.getLong(0)
     // v1 is always the lineage-less create commit: skipping it keeps the
     // common case (lineage table born with the lake, floor = 2) at ZERO
     // meta opens
-    val legacy = listVersions().filter(v => v < floor && v > 1L)
-    (if (legacy.isEmpty) t else t.unionByName(fromMetas(legacy)))
+    val belowFloor = listVersions().filter(v => v < floor && v > 1L)
+    (if (belowFloor.isEmpty) t else t.unionByName(fromMetas(belowFloor)))
       .orderBy(col("snapshot_version"))
   }
 
@@ -797,9 +737,9 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
     val combined = new StringBuilder
     parts.foreach { p =>
       combined ++= readTextFile(p.getPath)
-      // a legacy-truncated part (pre-atomic-append crash) may lack its
-      // trailing newline: splice a separator so the NEXT part's first
-      // record doesn't concatenate onto the partial one
+      // a torn part may lack its trailing newline: splice a separator so
+      // the NEXT part's first record doesn't concatenate onto the partial
+      // one
       if (combined.nonEmpty && combined.last != '\n') combined += '\n'
     }
     val name = s"c-${UUID.randomUUID().toString.take(12)}.json"
@@ -841,17 +781,6 @@ object LakeTable {
   def apply(spark: SparkSession, root: String): LakeTable =
     new LakeTable(root, spark.sparkContext.hadoopConfiguration)
 
-  /** Bucket-count ceiling for the zero-extra-job observe stats path in
-    * `writeDataFiles` (~2·numBuckets conditional aggregates per written
-    * row); wider tables use the follow-up stats scan. Parameterised
-    * (system property first — runtime-settable for tests — then env) so a
-    * deployment can tune where the crossover sits on its hardware.
-    */
-  def observeStatsMaxBuckets: Int =
-    sys.props.get("graft.lake.observeStatsMaxBuckets")
-      .orElse(sys.env.get("SPARK_GRAFT_OBSERVE_STATS_MAX_BUCKETS"))
-      .fold(64)(_.toInt)
-
   /** Scale-adaptive bucket count for a new table (guide §2.2/§6: derive
     * partitioning from input size, not a constant tuned for one scale):
     * ~`rowsPerBucket` keys per bucket, clamped to [4, 4096] and rounded
@@ -868,11 +797,52 @@ object LakeTable {
   }
 }
 
+/** Per-bucket write stats as one typed aggregate over `(bucket, tombLsn)`
+  * rows, where `tombLsn` is the row's `_lsn` for a delete tombstone and
+  * [[BucketStats.NoTomb]] otherwise. Buffer slot `b` counts bucket `b`'s
+  * rows; slot `numBuckets + b` holds its min tombstone `_lsn` (`NoTomb` =
+  * none). The per-row update is two array writes at any bucket count.
+  */
+private[lake] final class BucketStats(numBuckets: Int)
+    extends Aggregator[(Int, Long), Array[Long], Array[Long]] {
+  def zero: Array[Long] = {
+    val a = new Array[Long](2 * numBuckets)
+    java.util.Arrays.fill(a, numBuckets, 2 * numBuckets, BucketStats.NoTomb)
+    a
+  }
+  def reduce(buf: Array[Long], in: (Int, Long)): Array[Long] = {
+    buf(in._1) += 1
+    val t = numBuckets + in._1
+    if (in._2 < buf(t)) buf(t) = in._2
+    buf
+  }
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < numBuckets) { a(i) += b(i); i += 1 }
+    while (i < 2 * numBuckets) { a(i) = math.min(a(i), b(i)); i += 1 }
+    a
+  }
+  def finish(buf: Array[Long]): Array[Long] = buf
+  def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+}
+
+private[lake] object BucketStats {
+  val NoTomb: Long = Long.MaxValue
+}
+
 /** Line-oriented snapshot codec. Schemas serialize via Spark's own
-  * StructType JSON (single line); everything else is `key=value`.
+  * StructType JSON (single line); everything else is `key=value`. Data
+  * files are never inlined: each lives in its bucket's manifest
+  * (`bmanifest=` lines), and decoding leaves `files` empty for
+  * [[LakeTable.readSnapshot]] to resolve.
   */
 object SnapshotCodec {
   def encode(s: Snapshot): String = {
+    val uncovered = s.files.filterNot(f => s.bucketManifests.contains(f.bucket))
+    require(uncovered.isEmpty,
+      s"snapshot v${s.version}: files outside every bucket manifest: " +
+        uncovered.take(3).mkString(", "))
     val b = new StringBuilder
     b ++= s"version=${s.version}\n"
     b ++= s"batchId=${s.batchId}\n"
@@ -896,17 +866,9 @@ object SnapshotCodec {
     s.bucketManifests.toSeq.sorted.foreach { case (bk, rel) =>
       b ++= s"bmanifest=$bk|$rel\n"
     }
-    // marker only when the index is actually trustworthy: copies of a
-    // legacy snapshot (heartbeats, schema commits) must not self-certify
-    if (s.tombIndexed) b ++= "btminv=1\n"
     s.bucketTombMinLsn.toSeq.sorted.foreach { case (bk, l) =>
       b ++= s"btmin=$bk|$l\n"
     }
-    // manifest-covered buckets' files live in their manifest file, not here
-    s.files.filterNot(f => s.bucketManifests.contains(f.bucket))
-      .sortBy(f => (f.bucket, f.relPath)).foreach { f =>
-        b ++= s"file=${f.bucket}|${f.schemaVersion}|${f.relPath}\n"
-      }
     b.result()
   }
 
@@ -915,13 +877,11 @@ object SnapshotCodec {
     var endLsn = -1L; var numBuckets = 16; var backfillDone = 0
     val schemas = scala.collection.mutable.Map[Int, StructType]()
     val colAdd = scala.collection.mutable.Map[String, Long]()
-    val files = scala.collection.mutable.ArrayBuffer[DataFileEntry]()
     var lin: Option[LineageEntry] = None
     val bucketRows = scala.collection.mutable.Map[Int, Long]()
     val brows = scala.collection.mutable.Map[Int, Long]()
     val bmanifests = scala.collection.mutable.Map[Int, String]()
     val btmin = scala.collection.mutable.Map[Int, Long]()
-    var btminMarker = false
     text.split('\n').filter(_.nonEmpty).foreach { line =>
       val i = line.indexOf('=')
       val (k, v) = (line.substring(0, i), line.substring(i + 1))
@@ -942,7 +902,7 @@ object SnapshotCodec {
           val a = v.split('|')
           lin = Some(LineageEntry(a(0).toLong, a(1).toLong, a(2).toLong,
             a(3).toLong, a(4).toLong, a(5).toLong, a(6).toLong, Map.empty,
-            if (a.length > 7) a(7).toLong else 0L))
+            a(7).toLong))
         case "bucketrows" =>
           val Array(bk, n) = v.split('|'); bucketRows(bk.toInt) = n.toLong
         case "brows" =>
@@ -950,24 +910,14 @@ object SnapshotCodec {
         case "bmanifest" =>
           val i2 = v.indexOf('|')
           bmanifests(v.substring(0, i2).toInt) = v.substring(i2 + 1)
-        case "btminv" => btminMarker = true
         case "btmin" =>
           val Array(bk, l) = v.split('|'); btmin(bk.toInt) = l.toLong
-        case "file" =>
-          val a = v.split('|')
-          files += DataFileEntry(a(0).toInt, a(1).toInt, a(2))
         case _ => // forward compatibility: ignore unknown keys
       }
     }
     Snapshot(version, batchId, schemaVersion, endLsn, numBuckets,
       schemas.toMap, colAdd.toMap,
-      lin.map(_.copy(bucketRows = bucketRows.toMap)), files.toSeq,
-      brows.toMap, backfillDone, bmanifests.toMap, btmin.toMap,
-      // the MARKER alone decides: btmin and the marker shipped in the same
-      // change, so a marker-less meta carrying btmin lines can only be a
-      // PARTIAL commit on a legacy (unindexed) table — its btmin map covers
-      // just the touched buckets, and trusting it would let compaction skip
-      // the untouched legacy buckets' tombstones forever
-      tombIndexed = btminMarker)
+      lin.map(_.copy(bucketRows = bucketRows.toMap)), Nil,
+      brows.toMap, backfillDone, bmanifests.toMap, btmin.toMap)
   }
 }

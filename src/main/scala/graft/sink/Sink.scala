@@ -260,7 +260,6 @@ final class RawAppendSink(
     new graft.lake.AtomicFs(fs, hadoopConf)
 
   private def batchDir(id: Long) = new Path(root, f"batch=$id%d")
-  private def markerPath = new Path(root, "_compacted")
   private def schemaPath = new Path(root, "_schema.json")
 
   /** No-overwrite directory commit; true = this attempt won, false = a
@@ -314,21 +313,11 @@ final class RawAppendSink(
     * none). The committed `compacted-<id>` DIRS are the source of truth —
     * each is only visible after an atomic rename, and `compacted-N`
     * contains everything `compacted-M` (M < N) did — so a crash anywhere
-    * in [[compactRaw]]'s later steps (marker flip, superseded-dir deletes)
-    * cannot lose data or disable the replay guard. The `_compacted` marker
-    * is a fast-path hint only.
+    * in [[compactRaw]]'s later steps (superseded-dir deletes) cannot lose
+    * data or disable the replay guard.
     */
-  private[graft] def compactedUpTo: Long = {
-    val fromDirs = compactedDirs().lastOption.map(_._1).getOrElse(-1L)
-    val fromMarker =
-      if (!fs.exists(markerPath)) -1L
-      else {
-        val in = fs.open(markerPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      }
-    math.max(fromDirs, fromMarker)
-  }
+  private[graft] def compactedUpTo: Long =
+    compactedDirs().lastOption.map(_._1).getOrElse(-1L)
 
   /** Committed compacted dirs as (upToId, path), ascending. */
   private def compactedDirs(): Seq[(Long, Path)] =
@@ -339,9 +328,8 @@ final class RawAppendSink(
       .sortBy(_._1)
 
   // applyBatch runs once per micro-batch: cache the compaction floor
-  // instead of re-reading the marker/listing per trigger (two metadata
-  // RPCs per batch on an object store). compactRaw (same single-writer
-  // process) refreshes it.
+  // instead of re-listing per trigger (a metadata RPC per batch on an
+  // object store). compactRaw (same single-writer process) refreshes it.
   @transient @volatile private var compactedUpToCache: Long = Long.MinValue
   private def compactedUpToCached: Long = {
     if (compactedUpToCache == Long.MinValue) compactedUpToCache = compactedUpTo
@@ -631,12 +619,12 @@ final class RawAppendSink(
     * watermark) plus any earlier compacted dir into one
     * `compacted-<upTo>` dir. Kill-safe because committed `compacted-<id>`
     * dirs are the source of truth (see [[compactedUpTo]]): the ordering is
-    * write+rename the new dir (atomic visibility) → refresh the marker
-    * hint → delete superseded dirs. A crash after the rename leaves both
-    * generations on disk but readers use only the newest; the next
-    * compactRaw call finishes the cleanup (and treats an already-existing
-    * target as a completed predecessor, not an error). Returns the number
-    * of superseded dirs removed.
+    * write+rename the new dir (atomic visibility) → delete superseded
+    * dirs. A crash after the rename leaves both generations on disk but
+    * readers use only the newest; the next compactRaw call finishes the
+    * cleanup (and treats an already-existing target as a completed
+    * predecessor, not an error). Returns the number of superseded dirs
+    * removed.
     */
   def compactRaw(spark: SparkSession, upTo: Long = Long.MinValue): Int = {
     val prev = compactedUpTo
@@ -668,12 +656,6 @@ final class RawAppendSink(
     // exact generation and crashed before cleanup — proceed as a replay
     commitDir(tmp, new Path(root, s"compacted-$newUpTo"))
     compactedUpToCache = newUpTo
-    // marker refresh (fast-path hint; correctness never depends on it)
-    val mTmp = new Path(root, s".tmp-marker-${UUID.randomUUID().toString.take(8)}")
-    val o = fs.create(mTmp, true)
-    try o.write(newUpTo.toString.getBytes("UTF-8")) finally o.close()
-    fs.delete(markerPath, false)
-    require(fs.rename(mTmp, markerPath), "marker refresh failed")
     // now invisible to readers: superseded batch dirs + old compacted dir
     for ((_, p) <- eligible) { fs.delete(p, true); removed += 1 }
     if (prev >= 0) { fs.delete(new Path(root, s"compacted-$prev"), true); removed += 1 }

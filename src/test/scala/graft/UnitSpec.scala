@@ -62,13 +62,28 @@ class UnitSpec extends AnyFunSuite {
   }
 
   test("snapshot codec roundtrips all fields") {
+    // files live in their bucket manifests, not in the meta: decode leaves
+    // them for readSnapshot to resolve
     val s = Snapshot(7L, 3L, 2, 999L, 16,
       Map(1 -> base, 2 -> base.add(StructField("tool", StringType))),
       Map("tool" -> 501L),
-      Some(LineageEntry(3L, 10L, 999L, 5L, 2L, 1L, 1234L, Map(0 -> 7L, 3 -> 2L))),
+      Some(LineageEntry(3L, 10L, 999L, 5L, 2L, 1L, 1234L, Map(0 -> 7L, 3 -> 2L), 4L)),
       Seq(DataFileEntry(0, 1, "data/b=0/v1-0.parquet"),
-        DataFileEntry(3, 2, "data/b=3/v7-0.parquet")))
-    assert(SnapshotCodec.decode(SnapshotCodec.encode(s)) == s)
+        DataFileEntry(3, 2, "data/b=3/v7-0.parquet")),
+      bucketRowCounts = Map(0 -> 7L, 3 -> 2L),
+      backfillDone = 5,
+      bucketManifests = Map(0 -> "_manifests/m0-0.mf", 3 -> "_manifests/m7-3.mf"),
+      bucketTombMinLsn = Map(3 -> 950L))
+    assert(SnapshotCodec.decode(SnapshotCodec.encode(s)) == s.copy(files = Nil))
+  }
+
+  test("snapshot codec refuses a file outside every bucket manifest") {
+    val s = Snapshot(2L, 0L, 1, 10L, 4, Map(1 -> base), Map.empty, None,
+      Seq(DataFileEntry(0, 1, "data/c0/_bucket=0/a.parquet"),
+        DataFileEntry(1, 1, "data/c0/_bucket=1/b.parquet")),
+      bucketManifests = Map(0 -> "_manifests/m2-0.mf"))
+    val e = intercept[IllegalArgumentException](SnapshotCodec.encode(s))
+    assert(e.getMessage.contains("_bucket=1/b.parquet"))
   }
 
   test("snapshot codec ignores unknown keys (forward compatibility)") {
