@@ -76,21 +76,21 @@ object CdcRunner {
     val lakeDir = s"$work/lake"
     val ckptDir = s"$work/checkpoint"
 
-    // --rebase-checkpoint: the dedup-state retirement path (IntervalDedup
-    // scaladoc + the IntervalDedupSpec rebase test): drop ONLY the
-    // streaming checkpoint, keep the lake. Safe because redelivered
-    // pre-endLsn events die on the `lsn > endLsn` guard and the persisted
-    // batch-id offset keeps commit ids monotone across the fresh
-    // checkpoint — dedup state restarts empty instead of carrying every
-    // bucket bitmap forever. Refused when there is no lake position to
-    // guard replays with.
+    // --rebase-checkpoint: drop ONLY the streaming checkpoint, keep the
+    // lake. The migration path for a checkpoint written while the stateful
+    // dedup stage ran in front of the lake (Spark refuses to resume it
+    // without the stage; Pipeline.startQuery names this remedy). Safe
+    // because redelivered pre-endLsn events die on the `lsn > endLsn`
+    // guard and the persisted batch-id offset keeps commit ids monotone
+    // across the fresh checkpoint. Refused when there is no lake position
+    // to guard replays with.
     if (args.contains("--rebase-checkpoint")) {
       val lakeExists = fs.exists(new org.apache.hadoop.fs.Path(lakeDir))
       require(lakeExists, "--rebase-checkpoint needs an existing lake " +
         "(nothing would guard replayed events)")
       fs.delete(new org.apache.hadoop.fs.Path(ckptDir), true)
-      println("[cdc] checkpoint rebased: dedup state restarts empty; " +
-        "lake position guards replays")
+      println("[cdc] checkpoint rebased: the stream replays from the log " +
+        "start; lake position guards replays")
     }
 
     // add `tool` ~25% in; force odd parity (ddl lsns are odd by convention,
@@ -154,16 +154,10 @@ object CdcRunner {
         everyBatches = n,
         vacuumGraceMs = opt.get("--vacuum-grace-ms").map(_.toLong)
           .getOrElse(86400000L)))
-    // --rebase-threshold-mb: when the dedup state store crosses this size,
-    // /status flips rebaseRecommended=true — the operator signal for WHEN
-    // to pause+POST /rebase (at byte-stride LSNs the bitmap grows with the
-    // WAL window; see BENCH.md stride measurements). 0 = never recommend.
-    val rebaseThresholdBytes = opt.get("--rebase-threshold-mb")
-      .map(_.toLong * 1024 * 1024).getOrElse(0L)
     if (daemonSecs.isDefined) {
       val ctl = new graft.control.Control(spark, binlogDir,
         graft.sink.MergeSink(lake, maintenance = maintenance), ckptDir,
-        maxFilesPerTrigger = fpt, rebaseThresholdBytes = rebaseThresholdBytes)
+        maxFilesPerTrigger = fpt)
       // --http-bind widens past the loopback default (unauthenticated
       // verbs: widening is an explicit operator decision)
       val httpBind = opt.getOrElse("--http-bind", "127.0.0.1")

@@ -42,7 +42,7 @@ object ScalingBench {
     // State-store partition count is a PER-QUERY constant, not a per-cluster
     // one: Spark locks it into the checkpoint at query start and it cannot
     // follow executor-count changes — a real N→4N resize keeps it fixed. So
-    // the dedup stage's partitioning is sized once (default 96 = 3× the
+    // the raw sink's dedup stage is sized once (default 96 = 3× the
     // largest level measured here, identical at every level), while the
     // foreachBatch MERGE jobs repartition at 3×cores of the CURRENT level
     // (Pipeline.applyShufflePartitions).
@@ -97,7 +97,7 @@ object ScalingBench {
 
     // --lsn-stride N: model byte-position WALs (lsn advances by record
     // length, not by 1 slot) — same events, stride/2× wider lsn range,
-    // stride/2× more dedup bitmap state (the stride caveat measurement)
+    // stride/2× more raw-sink dedup bitmap state (the stride caveat)
     val stride = opt.getOrElse("--lsn-stride", "2").toLong
     // odd-parity ddl lsn (see CdcRunner: 2*c*e/4+1 is not always odd)
     val quarterCut = stride * convs * epc / 4
@@ -121,10 +121,10 @@ object ScalingBench {
     val lake = LakeTable(spark, s"$runDir/lake")
     lake.create(Schemas.transcriptNoTool, buckets)
 
-    val dedup = !args.contains("--no-dedup")
     // Per-batch decomposition via the progress stream: where a batch's wall
-    // went (total trigger, addBatch) and what the stateful dedup cost
-    // (update/removal/commit times, state rows, state memory). Host noise
+    // went (total trigger, addBatch) and, for the raw sink, what its
+    // stateful dedup cost (update/removal/commit times, state rows, state
+    // memory; -1 on the merge path, which has no state operator). Host noise
     // here runs to 3x on identical configs (BENCH.md), so component-level
     // attribution beats comparing end-to-end walls.
     val progressBuf = scala.collection.mutable.ArrayBuffer[String]()
@@ -184,7 +184,7 @@ object ScalingBench {
         val warmRaw = new graft.sink.RawAppendSink(s"$warmDir/raw",
           spark.sparkContext.hadoopConfiguration, Schemas.transcriptNoTool, 8)
         Pipeline.startQuery(spark, warmBinlog, warmRaw, s"$warmDir/ckpt",
-          maxFilesPerTrigger = 1, availableNow = true, transportDedup = dedup,
+          maxFilesPerTrigger = 1, availableNow = true,
           applyShufflePartitions = Some(shuffle)).awaitTermination()
         warmRaw.normalizeIncremental(spark).count()
         ()
@@ -192,8 +192,7 @@ object ScalingBench {
         val warmLake = LakeTable(spark, s"$warmDir/lake")
         warmLake.create(Schemas.transcriptNoTool, 8)
         Pipeline.runAvailable(spark, warmBinlog, warmLake, s"$warmDir/ckpt",
-          maxFilesPerTrigger = 1, transportDedup = dedup,
-          applyShufflePartitions = Some(shuffle))
+          maxFilesPerTrigger = 1, applyShufflePartitions = Some(shuffle))
       }
       fs.delete(new org.apache.hadoop.fs.Path(warmDir), true)
       Thread.sleep(1500) // listener bus is async: let warmup events land
@@ -208,7 +207,7 @@ object ScalingBench {
       case Some(raw) =>
         Pipeline.startQuery(spark, binlogDir, raw, s"$runDir/ckpt",
           maxFilesPerTrigger = fpt, availableNow = true,
-          transportDedup = dedup, applyShufflePartitions = Some(shuffle))
+          applyShufflePartitions = Some(shuffle))
           .awaitTermination()
         syncSec = (System.nanoTime() - t0) / 1e9
         val tn = System.nanoTime()
@@ -216,8 +215,7 @@ object ScalingBench {
         normSec = (System.nanoTime() - tn) / 1e9
       case None =>
         Pipeline.runAvailable(spark, binlogDir, lake, s"$runDir/ckpt",
-          maxFilesPerTrigger = fpt, transportDedup = dedup,
-          applyShufflePartitions = Some(shuffle),
+          maxFilesPerTrigger = fpt, applyShufflePartitions = Some(shuffle),
           // --maintenance-every N: inline compact+vacuum on the commit
           // thread, to price the maintenance tax at criterion scale
           maintenance = opt.get("--maintenance-every").map(_.toInt)
@@ -254,10 +252,10 @@ object ScalingBench {
       f""""liveRows":$live,"contentHash":"$contentHash",""" +
       f""""segments":$segments,"batches":${segments / fpt},""" +
       f""""statePartitions":$statePartitions,"shuffle":$shuffle,""" +
-      s""""dedup":$dedup,"dedupShift":${graft.dedup.IntervalDedup.DefaultShift},""" +
       s""""lsnStride":$stride,""" +
       s""""warmup":${!args.contains("--no-warmup")},""" +
-      (if (rawMode) f""""sink":"raw-append","syncSec":$syncSec%.2f,"normSec":$normSec%.2f,""" else "") +
+      (if (rawMode) f""""sink":"raw-append","syncSec":$syncSec%.2f,"normSec":$normSec%.2f,""" +
+        s""""dedupShift":${graft.dedup.IntervalDedup.DefaultShift},""" else "") +
       s""""batchWallMs":[${perBatch.mkString(",")}],""" +
       s""""progress":[${progressBuf.synchronized(progressBuf.mkString(","))}]}""")
     if (!args.contains("--keep-run-dir"))

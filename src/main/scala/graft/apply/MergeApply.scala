@@ -14,8 +14,12 @@ import graft.schema.{AddColumn, Reconcile, WidenColumn}
   * body (reference: src/pipeline/mod.rs:57-127,
   * src/connectors/sinks/postgres/normalizer.rs:102-359):
   *
-  *   reconcile schema → transport dedup → LWW reduce → partition-pruned
+  *   reconcile schema → stale-event guard → LWW reduce → partition-pruned
   *   copy-on-write MERGE → atomic lineage commit (idempotent by batchId).
+  *
+  * The apply is idempotent under at-least-once delivery on its own, so
+  * the streaming path runs it without a stateful dedup stage: see
+  * `isData` and the reduce note below.
   *
   * MERGE arm semantics follow the generated SQL of the reference
   * (reference: src/connectors/sinks/postgres/merge_generator.rs:128-189):
@@ -56,9 +60,9 @@ object MergeApply {
     // (ddl collect, bucket distinct, observe min/max/count).
     // `isData` embeds the per-event stale guard (reference should_emit,
     // src/control/state.rs:375-395): an event at or below the table's
-    // applied position — an at-least-once redelivery that outlived the
-    // dedup watermark — must not reach the LWW reduce, where it could
-    // resurrect a column value a fresher same-batch event didn't carry.
+    // applied position — an at-least-once redelivery from an earlier
+    // batch — must not reach the LWW reduce, where it could resurrect a
+    // column value a fresher same-batch event didn't carry.
     val isData = col("op") < Op.SchemaChange && col("lsn") > snap.endLsn
     val pre = batch.select(
       collect_list(when(col("op") === Op.SchemaChange,
@@ -120,7 +124,7 @@ object MergeApply {
     val payload = Schemas.payloadCols(merged)
     val addLsn = snap.colAddLsn ++ newColAdds
 
-    // ---- 2. dedup + LWW reduce ----
+    // ---- 2. stale guard + LWW reduce ----
     val data0 = batch.filter(isData)
     // ensure every declared payload column exists physically, with merged type
     val data = payload.foldLeft(data0) { (df, c) =>
@@ -132,9 +136,9 @@ object MergeApply {
     // No explicit dropDuplicates here: the LWW reduce is idempotent under
     // duplicated rows (same lsn ⇒ identical row ⇒ same max_by winner), so an
     // extra shuffle on lsn would buy nothing. Cross-batch redelivery is
-    // handled by the streaming IntervalDedup stage, the
-    // batchId guard, the per-event `lsn > snap.endLsn` filter in `isData`,
-    // and the per-key _lsn guard in the MERGE (defense in depth).
+    // handled by the batchId guard, the per-event `lsn > snap.endLsn`
+    // filter in `isData`, and the per-key _lsn guard in the MERGE (defense
+    // in depth); no streaming dedup stage runs in front of a merge.
     val ups = Dedup.lwwReduce(data, payload, addLsn)
 
     if (touched.isEmpty) {

@@ -2,7 +2,6 @@ package graft.apply
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.lake.LakeTable
 
@@ -48,80 +47,76 @@ object MultiApply {
     * reference-like 25 tables, sequential apply paid 25 serial commit
     * rounds of small-stage job time per micro-batch — the serial floor the
     * round-3 audit flagged. At most `MaxConcurrent` run at once.
+    *
+    * Every tracked table re-reads `batch` for its own filtered MERGE, so
+    * callers pass a persisted batch (the streaming path persists each
+    * micro-batch in [[graft.pipeline.Pipeline.startQuery]]); otherwise each
+    * table re-runs the batch's source scan.
     */
   def applyBatch(
       spark: SparkSession,
       lakes: Map[String, LakeTable],
       batch: DataFrame,
       batchId: Long): Long = {
-    // Persist once: every tracked table re-reads the batch for its own
-    // filtered MERGE — without the cache that is one source scan per table
-    // (at reference-like 25 tables, 25 scans of the same micro-batch).
-    val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one pre-scan: destination tables present + untracked-event count
-      // (reference A5: DISTINCT dst tables per flush). NULL `table` counts
-      // as untracked too — `!isInCollection` alone is NULL for NULL input,
-      // which would silently understate the drop count.
-      val tracked = lakes.keySet
-      val untracked =
-        col("table").isNull || !col("table").isInCollection(tracked)
-      val pre = cached.select(
-        collect_set(col("table")).as("tables"),
-        count(when(untracked, 1)).as("skipped"))
-        .head()
-      val present = pre.getSeq[String](0)
-      val skipped = pre.getLong(1)
-      // surface drops even when the caller ignores the return value (the
-      // streaming path does) — a typo'd/unregistered table must not lose
-      // events invisibly
-      if (skipped > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"multi-table apply batch $batchId: $skipped events dropped " +
-            s"(untracked destination tables; tracked=${lakes.keySet.toSeq.sorted.mkString(",")})")
-      val targets = present.filter(tracked).sorted
-      if (targets.size <= 1) {
-        for (t <- targets)
-          MergeApply.applyBatch(spark, lakes(t),
-            cached.filter(col("table") === t).drop("table"), batchId)
-      } else {
-        val gate = new java.util.concurrent.Semaphore(MaxConcurrent)
-        val futures = targets.map { t =>
-          // throttle at SUBMISSION, not inside the task: a wide table set
-          // (hundreds of targets) must not fan out one parked pool thread
-          // per target — with the permit held before submit, the shared
-          // cached pool never holds more than MaxConcurrent threads
-          gate.acquire()
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit =
-              try {
-                MergeApply.applyBatch(spark, lakes(t),
-                  cached.filter(col("table") === t).drop("table"), batchId)
-                ()
-              } finally gate.release()
-          })
-        }
-        // propagate the FIRST failure (unwrapped) — a failing table must
-        // halt the stream exactly as in the sequential path; cancel the
-        // rest (the pool is shared now, so no shutdownNow to sweep them)
-        try {
-          futures.foreach { f =>
-            try f.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            }
-          }
-        } catch {
-          case e: Throwable =>
-            futures.foreach(_.cancel(true))
-            throw e
-        }
+    // one pre-scan: destination tables present + untracked-event count
+    // (reference A5: DISTINCT dst tables per flush). NULL `table` counts
+    // as untracked too — `!isInCollection` alone is NULL for NULL input,
+    // which would silently understate the drop count.
+    val tracked = lakes.keySet
+    val untracked =
+      col("table").isNull || !col("table").isInCollection(tracked)
+    val pre = batch.select(
+      collect_set(col("table")).as("tables"),
+      count(when(untracked, 1)).as("skipped"))
+      .head()
+    val present = pre.getSeq[String](0)
+    val skipped = pre.getLong(1)
+    // surface drops even when the caller ignores the return value (the
+    // streaming path does) — a typo'd/unregistered table must not lose
+    // events invisibly
+    if (skipped > 0)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"multi-table apply batch $batchId: $skipped events dropped " +
+          s"(untracked destination tables; tracked=${lakes.keySet.toSeq.sorted.mkString(",")})")
+    val targets = present.filter(tracked).sorted
+    if (targets.size <= 1) {
+      for (t <- targets)
+        MergeApply.applyBatch(spark, lakes(t),
+          batch.filter(col("table") === t).drop("table"), batchId)
+    } else {
+      val gate = new java.util.concurrent.Semaphore(MaxConcurrent)
+      val futures = targets.map { t =>
+        // throttle at SUBMISSION, not inside the task: a wide table set
+        // (hundreds of targets) must not fan out one parked pool thread
+        // per target — with the permit held before submit, the shared
+        // cached pool never holds more than MaxConcurrent threads
+        gate.acquire()
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit =
+            try {
+              MergeApply.applyBatch(spark, lakes(t),
+                batch.filter(col("table") === t).drop("table"), batchId)
+              ()
+            } finally gate.release()
+        })
       }
-      skipped
-    } finally {
-      cached.unpersist()
-      ()
+      // propagate the FIRST failure (unwrapped) — a failing table must
+      // halt the stream exactly as in the sequential path; cancel the
+      // rest (the pool is shared now, so no shutdownNow to sweep them)
+      try {
+        futures.foreach { f =>
+          try f.get()
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              throw e.getCause
+          }
+        }
+      } catch {
+        case e: Throwable =>
+          futures.foreach(_.cancel(true))
+          throw e
+      }
     }
+    skipped
   }
 }

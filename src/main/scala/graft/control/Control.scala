@@ -3,7 +3,6 @@ package graft.control
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.dedup.IntervalDedup
 import graft.lake.LakeTable
 import graft.pipeline.Pipeline
 import graft.sink.{MergeSink, MultiSink, Sink}
@@ -38,12 +37,6 @@ case class ControlStatus(
     // snapshot (backfill) is still interleaving with the cdc stream
     state: String = "paused",
     stage: String = "cdc",
-    // current size of the streaming checkpoint's dedup state store (bytes
-    // on disk under <checkpoint>/state) — the one unbounded-in-lsn-range
-    // resource, surfaced so operators know WHEN to POST /rebase
-    dedupStateBytes: Long = -1L,
-    // true once dedupStateBytes crosses the configured rebase threshold
-    rebaseRecommended: Boolean = false,
     // multi-table deployments: one row per destination lake (reference
     // per-table progress, handlers.rs:255-291); empty for single-table
     tables: Seq[TableStatus] = Seq.empty)
@@ -74,88 +67,7 @@ trait EngineControl {
   def triggerSnapshotIfPaused(): Boolean
   def pauseSnapshot(): Unit
   def resumeSnapshot(): Unit
-  def rebaseIfPaused(): Boolean
   def close(): Unit
-}
-
-/** Memoized dedup-state size: `progressTs`
-  * keys the memo to the micro-batch that last committed (state only moves
-  * per batch), `epoch` guards against publishing a size computed across a
-  * concurrent rebase's checkpoint drop.
-  */
-private[control] case class StateBytesMemo(
-    bytes: Long, expiresAt: Long, progressTs: Long, epoch: Long)
-
-private[control] object StateBytesMemo {
-  val invalid: StateBytesMemo = StateBytesMemo(-1L, 0L, -1L, -1L)
-}
-
-/** The dedup-state size memo behind /status.
-  *
-  * /status may be polled at dashboard frequency, and a recursive listing
-  * of a multi-GB state dir per poll is real I/O against object storage —
-  * memoize for a few seconds. State only changes when a micro-batch
-  * commits, so the memo key also carries the latest progress timestamp: a
-  * fresh batch invalidates immediately instead of serving a stale size
-  * for up to 5 s. [[invalidate]] (called by pause/drain/rebase, which
-  * hold the control lock — the non-atomic volatile bump is single-writer)
-  * bumps the epoch BEFORE dropping the memo, so a poll that began its
-  * listing before the verb publishes into the OLD epoch and is discarded
-  * — /status can never resurrect a pre-drop size from an in-flight
-  * computation.
-  */
-private[control] final class StateBytesTracker(
-    spark: SparkSession, checkpointDir: String) {
-  @volatile private var epoch: Long = 0L
-  @volatile private var memo: StateBytesMemo = StateBytesMemo.invalid
-
-  def invalidate(): Unit = {
-    epoch += 1
-    memo = StateBytesMemo.invalid
-  }
-
-  def bytesNow(latestProgressTs: Long): Long = {
-    val now = System.currentTimeMillis()
-    val e = epoch
-    val m = memo
-    if (m.bytes >= 0 && now < m.expiresAt && latestProgressTs == m.progressTs &&
-        e == m.epoch) m.bytes
-    else {
-      val b = CheckpointOps.stateBytes(spark, checkpointDir)
-      if (epoch == e) memo = StateBytesMemo(b, now + 5000L, latestProgressTs, e)
-      b
-    }
-  }
-}
-
-/** Checkpoint-dir helpers of the control plane. */
-private[control] object CheckpointOps {
-  import org.apache.hadoop.fs.Path
-
-  /** Bytes on disk under `<checkpoint>/state` — the dedup state store. */
-  def stateBytes(spark: SparkSession, checkpointDir: String): Long = {
-    val p = new Path(checkpointDir, "state")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    var total = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) total += it.next().getLen
-    total
-  }
-
-  /** Drop the streaming checkpoint (offsets + dedup state), keeping the
-    * sink. Safe ONLY because (a) redelivered pre-endLsn events die on the
-    * sink's `lsn > endLsn` replay guard and (b) the persisted batch-id
-    * offset ([[graft.pipeline.Pipeline.batchIdOffset]]) keeps commit ids
-    * monotone across the fresh checkpoint. Callers must verify the sink
-    * HAS a position first.
-    */
-  def dropCheckpoint(spark: SparkSession, checkpointDir: String): Unit = {
-    val p = new Path(checkpointDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
 }
 
 /** The engine control plane: pause / resume / drain / stop / status plus
@@ -179,6 +91,10 @@ private[control] object CheckpointOps {
   * The backfill verbs (snapshot trigger, snapshot pause/resume) need a
   * MergeSink with a chunk source and fail loudly without one.
   *
+  * The checkpoint holds source offsets only: lake sinks run without the
+  * stateful dedup stage ([[Pipeline.startQuery]]), so there is no dedup
+  * state to size or retire.
+  *
   * Single-controller assumption, like the reference daemon's one control
   * loop; methods are synchronized for in-process safety.
   */
@@ -187,16 +103,7 @@ final class Control(
     binlogDir: String,
     sink: Sink,
     checkpointDir: String,
-    maxFilesPerTrigger: Int = 1,
-    transportDedup: Boolean = true,
-    // checkpoint-locked: resuming under a different shift fails loudly
-    dedupShift: Int = IntervalDedup.DefaultShift,
-    // dedup-state size (bytes under <checkpoint>/state) above which
-    // status() flags rebaseRecommended; 0 = never recommend. Sizing: the
-    // stride-64 measurement (BENCH.md) puts bitmap state at ~122 GB per
-    // 10^12-byte WAL window at shift 14 — a daemon tailing byte-stride
-    // LSNs should set this to what its executors can actually hold.
-    rebaseThresholdBytes: Long = 0L) extends EngineControl {
+    maxFilesPerTrigger: Int = 1) extends EngineControl {
 
   // the lakes that hold the stream position, sorted by table name
   private val lakes: Seq[(String, LakeTable)] = sink match {
@@ -262,8 +169,7 @@ final class Control(
 
   private def startQuery(availableNow: Boolean): StreamingQuery =
     Pipeline.startQuery(spark, binlogDir, engineSink, checkpointDir,
-      filesPerTrigger, availableNow = availableNow,
-      transportDedup = transportDedup, dedupShift = dedupShift)
+      filesPerTrigger, availableNow = availableNow)
 
   /** Start (or resume after [[pause]]) continuous processing. */
   def resume(): Unit = synchronized {
@@ -271,8 +177,8 @@ final class Control(
   }
 
   /** Config reload (reference handlers.rs:103-223): apply new settings and
-    * restart the query against the SAME checkpoint — offsets, dedup state
-    * and lake position all carry over; only the runtime knobs change. A
+    * restart the query against the SAME checkpoint — offsets and lake
+    * position carry over; only the runtime knobs change. A
     * paused engine stays paused (the new config takes effect at the next
     * [[resume]]).
     */
@@ -294,7 +200,6 @@ final class Control(
   def pause(): Unit = synchronized {
     query.foreach(_.stop())
     query = None
-    stateBytes.invalidate()
   }
 
   // surfaced as status().state while drain() holds the control lock (the
@@ -313,10 +218,7 @@ final class Control(
     try {
       startQuery(availableNow = true).awaitTermination()
       backfill.foreach(_.finishBackfill(spark))
-    } finally {
-      drainingFlag = false
-      stateBytes.invalidate()
-    }
+    } finally drainingFlag = false
   }
 
   def stop(): Unit = pause()
@@ -355,40 +257,6 @@ final class Control(
     else { triggerSnapshot(); true }
   }
 
-  /** Live dedup-state retirement (the rebase the runner's
-    * `--rebase-checkpoint` flag did only at process start): drop the
-    * streaming checkpoint — offsets AND the dedup state store — while the
-    * engine is paused, keeping the lakes. The next [[resume]] starts a
-    * fresh checkpoint whose batch ids are shifted past the sink's highest
-    * committed id ([[Pipeline.batchIdOffset]]; the MAX across lakes, so no
-    * lake can swallow a post-rebase batch), and any events the source
-    * redelivers below a lake's endLsn die on its per-key `lsn > endLsn`
-    * MERGE guard — replay equality is preserved with ZERO carried dedup
-    * state. Refused while running (the query owns the checkpoint) and
-    * while any lake has no applied position (nothing would guard replays).
-    */
-  def rebaseCheckpoint(): Unit = synchronized {
-    require(!isRunning,
-      "pause() the stream before rebaseCheckpoint(): the running query " +
-        "owns the checkpoint")
-    require(lakes.forall(_._2.snapshot().endLsn >= 0),
-      "refusing to rebase: a destination lake has no applied position " +
-        "(nothing would guard its replayed events)")
-    stateBytes.invalidate() // in-flight polls must not publish a pre-drop size
-    CheckpointOps.dropCheckpoint(spark, checkpointDir)
-    stateBytes.invalidate() // ...nor a partial size computed mid-delete
-  }
-
-  private val stateBytes = new StateBytesTracker(spark, checkpointDir)
-
-  /** Atomic paused-check + rebase for the HTTP facade (same race shape as
-    * [[triggerSnapshotIfPaused]]). Returns false (→ 409) when running.
-    */
-  def rebaseIfPaused(): Boolean = synchronized {
-    if (isRunning) false
-    else { rebaseCheckpoint(); true }
-  }
-
   def status(): ControlStatus = {
     val rows = lakes.map { case (name, lk) =>
       val s = lk.snapshot()
@@ -397,8 +265,6 @@ final class Control(
     }
     val snaps = rows.map(_._2)
     val backfillDone = snaps.map(_.backfillDone).max
-    val stateBytesNow =
-      stateBytes.bytesNow(metrics.latest.map(_.tsMs).getOrElse(-1L))
     ControlStatus(
       running = isRunning,
       snapshotVersion = snaps.map(_.version).max,
@@ -418,9 +284,6 @@ final class Control(
         else if (isRunning) "running" else "paused",
       stage = if (chunkSource.exists(_.numChunks > backfillDone))
         "snapshot" else "cdc",
-      dedupStateBytes = stateBytesNow,
-      rebaseRecommended =
-        rebaseThresholdBytes > 0 && stateBytesNow > rebaseThresholdBytes,
       tables = if (perTable) rows.map(_._1) else Seq.empty)
   }
 

@@ -26,12 +26,6 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *   POST /snapshot/pause  → hold further backfill chunks while the CDC
   *                           stream keeps flowing (handlers.rs:233-245)
   *   POST /snapshot/resume → let backfill chunks interleave again
-  *   POST /rebase    → drop the streaming checkpoint (dedup state +
-  *                     offsets) while paused, keeping the lake — live
-  *                     dedup-state retirement; HTTP 409 while running.
-  *                     /status carries dedupStateBytes (and
-  *                     rebaseRecommended once past the configured
-  *                     threshold) so operators know when.
   *
   * Serves the [[EngineControl]] verb surface of [[Control]]; a
   * multi-table engine's status adds one `tables` row per destination lake (reference per-table
@@ -107,8 +101,6 @@ final class HttpControl(ctl: EngineControl, port: Int = 0,
       s""""skippedEvolutions":${s.lastBatchSkippedEvolutions},""" +
       s""""eventsPerSec":${s.eventsPerSec},"lagMs":${s.lagMs},""" +
       s""""snapshotPaused":${s.snapshotPaused},""" +
-      s""""dedupStateBytes":${s.dedupStateBytes},""" +
-      s""""rebaseRecommended":${s.rebaseRecommended},""" +
       s""""state":"${s.state}","stage":"${s.stage}"""" +
       (if (s.tables.isEmpty) "}"
        else s.tables.map(t =>
@@ -172,15 +164,6 @@ final class HttpControl(ctl: EngineControl, port: Int = 0,
   })
   server.createContext("/stop", handler { ex =>
     postOnly(ex) { ctl.stop(); (200, statusJson) }
-  })
-  server.createContext("/rebase", handler { ex =>
-    postOnly(ex) {
-      // same atomic check+verb shape as /snapshot: the control lock spans
-      // the paused check and the checkpoint drop
-      if (ctl.rebaseIfPaused()) (200, statusJson)
-      else
-        (409, """{"error":"pause the stream before rebasing the checkpoint"}""")
-    }
   })
   // JDK HttpServer matches the LONGEST registered context prefix, so these
   // win over the plain /snapshot trigger above for their exact paths

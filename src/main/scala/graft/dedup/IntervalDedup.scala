@@ -9,6 +9,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * = effectively-once, docs/architecture.md; offset tracking
   * src/core/position.rs:6-26).
   *
+  * Where it runs: only in front of a [[graft.sink.RawAppendSink]], whose
+  * staged log stores events verbatim and so must hold each lsn once. The
+  * merge sinks need no stage: their apply drops every event at or below
+  * the lake's applied lsn, so a merge pipeline carries no dedup state.
+  *
   * Why: keyed on raw `lsn`, Spark's dedup state holds ONE ROW PER EVENT
   * inside the watermark (~300 B/key in the HDFS-backed store — measured in
   * BENCH.md: 8M-key batches ≈ 2.6 GB of long-lived heap). At 10^10-event
@@ -49,10 +54,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     cluster-total after 10^10 consecutive lsns, hash-spread over the
   *     state partitions, and far less when the range is sparse (only
   *     touched 2^shift-lsn windows pay their 2 KiB). A years-long stream
-  *     that does outgrow this restarts the query on a fresh checkpoint
-  *     once the lake's compaction horizon passes — the per-event
-  *     `lsn > endLsn` filter already suppresses anything the source can
-  *     still replay below it.
+  *     that does outgrow this restarts the query on a fresh checkpoint:
+  *     the replayed history is staged once more, and the normalize fold's
+  *     per-event `lsn > endLsn` filter drops it again.
   *
   * Skew note: within one micro-batch, consecutive lsns land in few
   * buckets, but a 16M-event batch still spans ~10^3 buckets (shift 14)
@@ -114,7 +118,7 @@ object IntervalDedup {
   private[graft] def decode(arr: Array[Long], nWords: Int, shift: Int): Array[Long] = {
     val mismatch = s"dedup state was checkpointed with a different shift " +
       s"or is corrupt (container length ${arr.length}, bitmap words $nWords); " +
-      "resume with the original shift or start a fresh checkpoint (/rebase)"
+      "resume with the original shift or start a fresh checkpoint"
     if (arr.length == nWords) arr.clone()
     else {
       require(arr.length < nWords, mismatch)

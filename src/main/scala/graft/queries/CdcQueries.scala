@@ -317,8 +317,11 @@ object CdcQueries {
       _.create(Schemas.transcript, LakeTable.bucketsFor(maxLsn / 3)))
     val step = math.max(1L, maxLsn / 3 + 1)
     for (i <- 0 until 3) {
+      // persisted like a streaming micro-batch: every routed table re-reads it
       val b = env.filter(col("lsn") >= i * step && col("lsn") < (i + 1) * step)
-      MultiApply.applyBatch(spark, lakes, b, i.toLong)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try MultiApply.applyBatch(spark, lakes, b, i.toLong)
+      finally { b.unpersist(); () }
     }
     lakes.toSeq.sortBy(_._1).map { case (name, lake) =>
       lake.read(spark).withColumn("tbl", lit(name))

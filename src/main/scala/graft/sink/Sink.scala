@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.apply.{Backfill, MergeApply, MultiApply}
 import graft.dedup.Dedup
@@ -32,10 +33,14 @@ import graft.model.{Op, Schemas}
   *     but bulk appends are cheap.
   *
   * [[graft.pipeline.Pipeline.startQuery]] feeds every kind through the same
-  * source → dedup → observe front end and hands each micro-batch to
-  * [[applyBatch]]; anything a sink does per batch beyond the apply
+  * source → observe front end and hands each micro-batch, persisted once,
+  * to [[applyBatch]]; anything a sink does per batch beyond the apply
   * (backfill chunks, maintenance) happens inside that call, on the commit
-  * thread, so the sink's single-writer rule holds by construction.
+  * thread, so the sink's single-writer rule holds by construction. Only a
+  * [[RawAppendSink]] gets the stateful transport-dedup stage in front: its
+  * raw log stores events verbatim. The merge sinks need no carried dedup
+  * state — their apply drops every event at or below the lake's applied
+  * lsn.
   *
   * Contract: [[applyBatch]] must be idempotent per batchId (a replayed
   * batch is a no-op) and must THROW on failure — the pipeline never
@@ -53,9 +58,9 @@ trait Sink extends Serializable {
   def read(spark: SparkSession): DataFrame
 
   /** Highest batch id this sink has durably committed (−1 = none): the
-    * anchor for [[graft.pipeline.Pipeline.batchIdOffset]]'s checkpoint-
-    * rebase shift, so a fresh checkpoint's restarted batch ids can never
-    * collide with (and be swallowed by) this sink's replay guard.
+    * anchor for [[graft.pipeline.Pipeline.batchIdOffset]]'s shift, so a
+    * fresh checkpoint's restarted batch ids can never collide with (and be
+    * swallowed by) this sink's replay guard.
     */
   def lastBatchId(spark: SparkSession): Long = -1L
 
@@ -207,8 +212,8 @@ final class MultiSink(
     maintOrder.map(t => lakes(t).read(spark).withColumn("table", lit(t)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
-  /** The MAX committed id across lakes: a rebase's shifted batch ids must
-    * clear every lake's replay guard.
+  /** The MAX committed id across lakes: a fresh checkpoint's shifted batch
+    * ids must clear every lake's replay guard.
     */
   override def lastBatchId(spark: SparkSession): Long =
     lakes.values.map(_.snapshot().batchId).foldLeft(-1L)(math.max)
@@ -216,7 +221,9 @@ final class MultiSink(
 
 /** Append-only raw staging: each micro-batch lands as an immutable
   * `batch=<id>` parquet directory of unmodified change events (ddl rows
-  * included — the raw log is faithful). Exactly-once comes from the
+  * included — the raw log is faithful). The streaming path runs the
+  * stateful [[graft.dedup.IntervalDedup]] stage in front of this sink only,
+  * so the staged log holds each lsn once. Exactly-once comes from the
   * directory-per-batch commit: data is written to a hidden temp dir and
   * renamed to its final name with no-overwrite semantics, so a replayed
   * batch is a no-op and a crashed write leaves only an invisible `.tmp-*`
@@ -569,35 +576,40 @@ final class RawAppendSink(
       else Seq.empty
     val srcs = compactedPending ++ pending.map(_._2.toString)
     if (srcs.nonEmpty) {
+      // persisted: the table pre-scan below and every per-table MERGE in
+      // MultiApply re-read it
       val df = spark.read.schema(stagedSchema).parquet(srcs: _*)
         .select((Schemas.changeEvent.fieldNames.toSeq :+ "table").map(col): _*)
-      // destination tables present in the pending range get their lakes
-      // created up front; MultiApply then routes per table. An UNSAFE
-      // table name must be skipped with a warning, not thrown on —
-      // throwing here would poison normalization forever (the pending set
-      // never advances, every retry re-reads the same batch and dies);
-      // skipped names fall through to MultiApply's untracked-drop path.
-      val present = df.filter(col("table").isNotNull)
-        .select(collect_set(col("table"))).head().getSeq[String](0)
-      present.filterNot(isSafeTableName).foreach(t =>
-        System.err.println(
-          s"[sink] skipping unsafe destination table name '$t'" +
-            " (rows drop as untracked)"))
-      present.filter(isSafeTableName).foreach { t =>
-        val lk = tableLakeHandle(t)
-        if (lk.snapshotVersions().isEmpty) lk.create(schema, numBuckets)
-      }
-      val bound = math.max(cUpTo, pending.map(_._1).foldLeft(-1L)(math.max))
-      MultiApply.applyBatch(spark, normalizedTableLakes(), df, bound)
-      // MultiApply advances only tables PRESENT in the folded range; a
-      // table quiet in this range would otherwise pin the MIN watermark
-      // forever (every later fold re-reads all batches, compaction never
-      // progresses). ONE marker write per fold records the completed
-      // bound — not one empty commit per quiet lake, which at
-      // reference-like 25+ tables was O(tables) version churn per fold.
-      // Written AFTER the fan-out returns (all per-table commits durable);
-      // a crash before it just refolds the range idempotently.
-      writeNwMarker(bound)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // destination tables present in the pending range get their lakes
+        // created up front; MultiApply then routes per table. An UNSAFE
+        // table name must be skipped with a warning, not thrown on —
+        // throwing here would poison normalization forever (the pending set
+        // never advances, every retry re-reads the same batch and dies);
+        // skipped names fall through to MultiApply's untracked-drop path.
+        val present = df.filter(col("table").isNotNull)
+          .select(collect_set(col("table"))).head().getSeq[String](0)
+        present.filterNot(isSafeTableName).foreach(t =>
+          System.err.println(
+            s"[sink] skipping unsafe destination table name '$t'" +
+              " (rows drop as untracked)"))
+        present.filter(isSafeTableName).foreach { t =>
+          val lk = tableLakeHandle(t)
+          if (lk.snapshotVersions().isEmpty) lk.create(schema, numBuckets)
+        }
+        val bound = math.max(cUpTo, pending.map(_._1).foldLeft(-1L)(math.max))
+        MultiApply.applyBatch(spark, normalizedTableLakes(), df, bound)
+        // MultiApply advances only tables PRESENT in the folded range; a
+        // table quiet in this range would otherwise pin the MIN watermark
+        // forever (every later fold re-reads all batches, compaction never
+        // progresses). ONE marker write per fold records the completed
+        // bound — not one empty commit per quiet lake, which at
+        // reference-like 25+ tables was O(tables) version churn per fold.
+        // Written AFTER the fan-out returns (all per-table commits durable);
+        // a crash before it just refolds the range idempotently.
+        writeNwMarker(bound)
+      } finally { df.unpersist(); () }
     }
     val lakes = normalizedTableLakes()
     if (lakes.isEmpty) {

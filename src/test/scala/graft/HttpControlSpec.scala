@@ -111,7 +111,7 @@ class HttpControlSpec extends SparkSpec {
     }
   }
 
-  test("live rebase: dedup state drops mid-soak, replay equality preserved") {
+  test("live rebase: checkpoint dropped mid-soak, replay equality preserved") {
     val cfg = GenConfig(seed = 97, numConvs = 40, eventsPerConv = 20,
       pctUpdate = 0.3, pctDelete = 0.1)
     val events = BinlogGen.events(cfg)
@@ -132,26 +132,18 @@ class HttpControlSpec extends SparkSpec {
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 4)
     val ctl = new Control(spark, s"$work/binlog", MergeSink(lake),
-      s"$work/ckpt", maxFilesPerTrigger = 2, rebaseThresholdBytes = 1L)
+      s"$work/ckpt", maxFilesPerTrigger = 2)
     val http = new HttpControl(ctl).start()
     try {
       val port = http.boundPort
       post(port, "/drain")
       val batchBefore = lake.snapshot().batchId
       assert(batchBefore >= 0)
-      // dedup state accumulated; past the (tiny) threshold -> recommended
-      val st1 = get(port, "/status")._2
-      assert(!st1.contains("\"dedupStateBytes\":0,"),
-        s"no dedup state after drain: $st1")
-      assert(st1.contains("\"rebaseRecommended\":true"))
 
-      // rebase refused while running (409), then accepted when paused
+      // mid-soak: run, pause, then drop the checkpoint while paused
       post(port, "/resume")
-      assert(post(port, "/rebase")._1 == 409)
       post(port, "/pause")
-      val (cr, sr) = post(port, "/rebase")
-      assert(cr == 200 && sr.contains("\"dedupStateBytes\":0,"), sr)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$work/ckpt")))
+      fs.delete(new org.apache.hadoop.fs.Path(s"$work/ckpt"), true)
 
       // phase 2: the REST of the segments arrive; the fresh checkpoint
       // re-reads phase-1 segments too (worst-case redelivery) — the lake's
@@ -165,8 +157,6 @@ class HttpControlSpec extends SparkSpec {
         "replay equality broken across live rebase")
       // batch ids stayed monotone across the rebase (no swallowed batches)
       assert(lake.snapshot().batchId > batchBefore)
-      // new (small) state accumulated under the fresh checkpoint
-      assert(!get(port, "/status")._2.contains("\"dedupStateBytes\":0,"))
     } finally {
       http.stop()
       ctl.close()
@@ -211,14 +201,16 @@ class HttpControlSpec extends SparkSpec {
       assert(st.contains(s""""rowCount":$rowCountSum,"""), st)
       // pause/resume/reload round-trip on the multi engine
       assert(post(port, "/resume")._2.contains("\"running\":true"))
-      assert(post(port, "/rebase")._1 == 409) // running
       assert(post(port, "/reload?maxFilesPerTrigger=4")._2
         .contains("\"running\":true"))
       assert(post(port, "/pause")._2.contains("\"running\":false"))
-      // live rebase across the whole table set; a further drain with the
-      // re-read log is a per-table no-op (replay equality per lake)
+      // live rebase across the whole table set (checkpoint dropped while
+      // paused); a further drain with the re-read log is a per-table no-op
+      // (replay equality per lake)
       val before = lakes.map { case (nm, l) => nm -> liveState(l) }
-      assert(post(port, "/rebase")._1 == 200)
+      val ckpt = new org.apache.hadoop.fs.Path(s"$work/ckpt")
+      ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(ckpt, true)
       post(port, "/drain")
       assert(lakes.forall { case (nm, l) => liveState(l) == before(nm) },
         "post-rebase redelivery changed a table")
@@ -314,15 +306,13 @@ class HttpControlSpec extends SparkSpec {
         fail("verb reached the engine during a drain")
       def pauseSnapshot(): Unit = fail("verb reached the engine during a drain")
       def resumeSnapshot(): Unit = fail("verb reached the engine during a drain")
-      def rebaseIfPaused(): Boolean =
-        fail("verb reached the engine during a drain")
       def close(): Unit = ()
     }
     val http = new HttpControl(stub).start()
     try {
       val port = http.boundPort
       for (verb <- Seq("/pause", "/resume", "/drain", "/stop", "/reload",
-        "/snapshot", "/snapshot/pause", "/snapshot/resume", "/rebase")) {
+        "/snapshot", "/snapshot/pause", "/snapshot/resume")) {
         val (code, body) = post(port, verb)
         assert(code == 409 && body.contains("draining"), s"verb $verb")
       }

@@ -8,6 +8,7 @@ import graft.dedup.IntervalDedup
 import graft.lake.LakeTable
 import graft.model.{Schemas, Transcript}
 import graft.pipeline.Pipeline
+import graft.sink.RawAppendSink
 
 /** The bitmap dedup stage against a naive seen-set model: crafted
   * micro-batches through a MemoryStream exercise arbitrary lsn patterns —
@@ -176,9 +177,11 @@ class IntervalSetSpec extends AnyFunSuite {
   }
 }
 
-/** End-to-end pipeline runs with the interval dedup as the transport stage:
-  * the same redelivery suites the hash dedup passes, plus a state-size
-  * assertion (the point of the operator).
+/** End-to-end pipeline runs over binlog redelivery. The interval dedup
+  * runs in front of the raw-append sink only, so the suites that check the
+  * stage itself (state size, rebase, the checkpoint-locked shift) drive a
+  * [[RawAppendSink]] pipeline and judge its normalized table; the
+  * redelivery suites through the merge path pin the merge's own guards.
   */
 class IntervalDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -187,6 +190,45 @@ class IntervalDedupSpec extends SparkSpec {
     lake.read(spark)
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts", "_lsn", "_op")
       .as[Transcript].collect().toVector.sortBy(t => (t.conv_id, t.turn_idx))
+
+  private def rawSink(work: String): RawAppendSink =
+    new RawAppendSink(s"$work/raw", spark.sparkContext.hadoopConfiguration,
+      Schemas.transcript, 8)
+
+  /** Drain `binlog` into the raw sink, then fold it into its normalized
+    * table; returns that table's live state.
+    */
+  private def drainRaw(raw: RawAppendSink, binlog: String, ckpt: String,
+      maxFilesPerTrigger: Int,
+      dedupShift: Int = IntervalDedup.DefaultShift): Vector[Transcript] = {
+    Pipeline.startQuery(spark, binlog, raw, ckpt,
+      maxFilesPerTrigger = maxFilesPerTrigger, dedupShift = dedupShift)
+      .awaitTermination()
+    raw.normalizeIncremental(spark)
+    liveState(raw.normalizedLake(spark))
+  }
+
+  /** Highest state-row count any progress event reports while `body` runs. */
+  private def maxStateRowsDuring(body: => Unit): Long = {
+    @volatile var maxStateRows = -1L
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(so =>
+          maxStateRows = math.max(maxStateRows, so.numRowsTotal))
+    }
+    spark.streams.addListener(listener)
+    try body
+    finally {
+      // listener bus is async; drain before asserting
+      val deadline = System.currentTimeMillis() + 10000
+      while (maxStateRows < 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      spark.streams.removeListener(listener)
+    }
+    maxStateRows
+  }
 
   test("duplicates across segments collapse (interval dedup)") {
     val cfg = GenConfig(seed = 23, numConvs = 30, eventsPerConv = 20)
@@ -210,28 +252,13 @@ class IntervalDedupSpec extends SparkSpec {
     val work = tmpDir("ivdedup2")
     BinlogGen.writeSegments(spark,
       spark.createDataset(events).toDF(), s"$work/binlog", 4)
-    val lake = LakeTable(spark, s"$work/lake")
-    lake.create(Schemas.transcript, 8)
-    @volatile var maxStateRows = -1L
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        e.progress.stateOperators.foreach(so =>
-          maxStateRows = math.max(maxStateRows, so.numRowsTotal))
-    }
-    spark.streams.addListener(listener)
-    try {
-      Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
+    val raw = rawSink(work)
+    var live = Vector.empty[Transcript]
+    val maxStateRows = maxStateRowsDuring {
+      live = drainRaw(raw, s"$work/binlog", s"$work/ckpt",
         maxFilesPerTrigger = 2)
-    } finally {
-      // listener bus is async; drain before asserting
-      val deadline = System.currentTimeMillis() + 10000
-      while (maxStateRows < 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      spark.streams.removeListener(listener)
     }
-    assert(liveState(lake) == OracleFold.finalState(BinlogGen.events(cfg)))
+    assert(live == OracleFold.finalState(BinlogGen.events(cfg)))
     val totalEvents = events.size
     assert(maxStateRows >= 0)
     assert(maxStateRows <= totalEvents / 100,
@@ -241,28 +268,30 @@ class IntervalDedupSpec extends SparkSpec {
   test("checkpoint rebase: fresh checkpoint after compaction absorbs a full " +
       "replay AND applies new events (batch-id offset)") {
     // The dedup-state retirement path (IntervalDedup scaladoc): once the
-    // lake's compaction horizon passes, restart the query on a FRESH
-    // checkpoint — redelivered pre-horizon events die on the per-event
-    // `lsn > endLsn` filter, and dedup state starts empty. The trap this
-    // test pins down: a fresh checkpoint restarts streaming batch ids at
-    // 0, so without the persisted batch-id offset the lake's batchId
-    // replay guard would swallow the first N REAL batches after rebase.
+    // raw log is folded and compacted, restart the query on a FRESH
+    // checkpoint — dedup state starts empty, the replayed history is
+    // staged again, and the normalize fold's per-event `lsn > endLsn`
+    // filter drops it. The trap this test pins down: a fresh checkpoint
+    // restarts streaming batch ids at 0, so without the persisted
+    // batch-id offset the sink's replay guard would swallow the first N
+    // REAL batches after rebase.
     val cfg = GenConfig(seed = 37, numConvs = 40, eventsPerConv = 20)
     val events = BinlogGen.events(cfg)
     val work = tmpDir("ivrebase")
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
     BinlogGen.writeSegments(spark,
       spark.createDataset(events).toDF(), s"$work/binlog", 4)
-    val lake = LakeTable(spark, s"$work/lake")
-    lake.create(Schemas.transcript, 8)
-    Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1)
-    assert(liveState(lake) == OracleFold.finalState(events))
-    val batchIdBefore = lake.snapshot().batchId
+    val raw = rawSink(work)
+    assert(drainRaw(raw, s"$work/binlog", s"$work/ckpt",
+      maxFilesPerTrigger = 1) == OracleFold.finalState(events))
+    val batchIdBefore = raw.lastBatchId(spark)
     assert(batchIdBefore >= 3, "fixture must span several batches")
 
-    // horizon passes: GC tombstones; then REBASE — drop the checkpoint
-    lake.compact(spark, horizonLsn = lake.snapshot().endLsn)
+    // horizon passes: GC tombstones, coalesce the folded raw batches; then
+    // REBASE — drop the checkpoint
+    val norm = raw.normalizedLake(spark)
+    norm.compact(spark, horizonLsn = norm.snapshot().endLsn)
+    raw.compactRaw(spark)
     fs.delete(new Path(s"$work/ckpt"), true)
 
     // new reality after the rebase: a post-horizon update + a new turn,
@@ -286,29 +315,16 @@ class IntervalDedupSpec extends SparkSpec {
       fs.setTimes(to, BinlogGen.BaseMs + 500000L + i * 1000L, -1)
     }
 
-    @volatile var maxStateRows = -1L
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        e.progress.stateOperators.foreach(so =>
-          maxStateRows = math.max(maxStateRows, so.numRowsTotal))
-    }
-    spark.streams.addListener(listener)
-    try {
-      Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
+    var live = Vector.empty[Transcript]
+    val maxStateRows = maxStateRowsDuring {
+      live = drainRaw(raw, s"$work/binlog", s"$work/ckpt",
         maxFilesPerTrigger = 2)
-    } finally {
-      val deadline = System.currentTimeMillis() + 10000
-      while (maxStateRows < 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      spark.streams.removeListener(listener)
     }
     // replay absorbed, tail applied: exact oracle over history + tail
-    assert(liveState(lake) == OracleFold.finalState(events ++ tail))
+    assert(live == OracleFold.finalState(events ++ tail))
     // the rebased run's commits landed ABOVE the old batchId — none were
     // swallowed by the replay guard
-    assert(lake.snapshot().batchId > batchIdBefore)
+    assert(raw.lastBatchId(spark) > batchIdBefore)
     // fresh state rebuilt from scratch stays bitmap-bounded
     assert(maxStateRows >= 0 && maxStateRows <= events.size / 10)
   }
@@ -336,13 +352,12 @@ class IntervalDedupSpec extends SparkSpec {
       }
     BinlogGen.writeSegments(spark,
       spark.createDataset(firstHalf).toDF(), s"$work/seg-a", 3)
-    val lake = LakeTable(spark, s"$work/lake")
-    lake.create(Schemas.transcript, 8)
+    val raw = rawSink(work)
     fs.mkdirs(new Path(s"$work/binlog"))
     deliver(s"$work/seg-a", "a-", BinlogGen.BaseMs)
-    Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupShift = 20)
-    assert(liveState(lake) == OracleFold.finalState(firstHalf))
+    assert(drainRaw(raw, s"$work/binlog", s"$work/ckpt",
+      maxFilesPerTrigger = 1, dedupShift = 20) ==
+      OracleFold.finalState(firstHalf))
 
     // rest of the log + a redelivered slice: resuming under the DEFAULT
     // shift hits stored shift-20 bitmaps and must fail loudly
@@ -351,7 +366,7 @@ class IntervalDedupSpec extends SparkSpec {
       spark.createDataset(rest.sortBy(_.lsn)).toDF(), s"$work/seg-b", 3)
     deliver(s"$work/seg-b", "b-", BinlogGen.BaseMs + 100000L)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
+      drainRaw(raw, s"$work/binlog", s"$work/ckpt",
         maxFilesPerTrigger = 1, dedupShift = IntervalDedup.DefaultShift)
     }
     def rootChain(t: Throwable): Seq[Throwable] =
@@ -361,9 +376,13 @@ class IntervalDedupSpec extends SparkSpec {
       s"wrong failure: $e")
     // the failed batch never committed: the matching-shift resume replays
     // it and converges on the full-history oracle
-    Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupShift = 20)
-    assert(liveState(lake) == OracleFold.finalState(events))
+    assert(drainRaw(raw, s"$work/binlog", s"$work/ckpt",
+      maxFilesPerTrigger = 1, dedupShift = 20) ==
+      OracleFold.finalState(events))
+    // and the shift-20 state collapsed the redelivered slice: the staged
+    // log holds each lsn once
+    val lsns = raw.read(spark).select("lsn").as[Long].collect()
+    assert(lsns.length == events.size && lsns.distinct.length == events.size)
   }
 
   test("stop/restart: redelivery across restart collapses; state resumes") {

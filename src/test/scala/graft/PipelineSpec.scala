@@ -154,8 +154,10 @@ class PipelineSpec extends SparkSpec {
     // intra-batch duplicates collapse in the idempotent LWW reduce, and
     // cross-batch replays die on the per-event `lsn > endLsn` filter —
     // the reference's own contract (at-least-once + idempotent MERGE, T3).
-    // The stateful stage stays for out-of-order transports; this pins the
-    // defense-in-depth claim that lets trusted transports skip its shuffle.
+    // That is why the merge path runs without the stage. The stage would
+    // not rescue out-of-order delivery either: a never-seen event below
+    // the applied lsn dies on the same filter whether or not the stage
+    // runs. Only the raw-append sink keeps the stage, for its staged log.
     val cfg = GenConfig(seed = 19, numConvs = 30, eventsPerConv = 20)
     val events = BinlogGen.events(cfg)
     val dup = events ++ events.filter(_.lsn % 5 == 0) ++ events.take(50)
@@ -165,7 +167,7 @@ class PipelineSpec extends SparkSpec {
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 8)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, transportDedup = false)
+      maxFilesPerTrigger = 2)
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 
